@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, evaluated through the noop sink (count() would
@@ -145,8 +145,10 @@ object Bench {
     val forked = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
     if (!isChild && forked) orchestrate()
     else {
-      val results = measureInProcess(selectedNames(), None)
-      emit(results, defaultOut, startNanos = procStart, quiet = isChild)
+      val measured = measureInProcess(selectedNames(), None)
+      emit(measured.collect { case (n, Some(st)) => n -> st }, defaultOut,
+        startNanos = procStart, quiet = isChild,
+        failed = measured.collect { case (n, None) => n })
     }
     // Terminate the JVM explicitly so the summary println above is the
     // LAST thing on stdout (r19, the r18 verdict's top ask — three
@@ -249,6 +251,7 @@ object Bench {
     val out = defaultOut
     val results = scala.collection.mutable.LinkedHashMap[String, QStat]()
     val degraded = scala.collection.mutable.ListBuffer[String]()
+    val failed = scala.collection.mutable.ListBuffer[String]()
     var degrade = false
     var skipRemeasure = false
     var famDone = 0
@@ -281,16 +284,23 @@ object Bench {
         runChild(fam, extra)
       }
       parsed match {
-        case Some(m) => fam.foreach(n => m.get(n).foreach(results(n) = _))
+        // a family member missing from the child's stats threw
+        case Some(m) => fam.foreach(n => m.get(n) match {
+          case Some(st) => results(n) = st
+          case None => failed += n
+        })
         case None =>
           System.err.println(s"[bench] child failed twice for ${fam.mkString(",")}; measuring in-process")
           // The fallback honors the active degrade (r18, the r17
           // advisor: it used to read the parent's BENCH_RUNS env, so
           // a "degraded" family could silently get 3 timed runs and
           // the artifact misstated how it was measured)
-          results ++= measureInProcess(fam,
+          measureInProcess(fam,
             spark.orElse { spark = Some(buildSession()); spark },
-            runsOverride = if (degrade) Some(1) else None)
+            runsOverride = if (degrade) Some(1) else None).foreach {
+            case (n, Some(st)) => results(n) = st
+            case (n, None) => failed += n
+          }
       }
       if (degrade) degraded ++= fam
       famDone += 1
@@ -300,7 +310,7 @@ object Bench {
       // an end-only write). The final emit below overwrites with
       // partial=false.
       emit(results.toSeq, out, startNanos = t0, quiet = true,
-        partial = true, degraded = degraded.toSeq)
+        partial = true, degraded = degraded.toSeq, failed = failed.toSeq)
     }
     spark.foreach(_.stop())
     // Self-enforcing spread rule (r11): a query whose timed-run
@@ -365,7 +375,7 @@ object Bench {
       }
     }
     emit(results.toSeq, out, startNanos = t0, quiet = false,
-      remeasured = remeasured, degraded = degraded.toSeq,
+      remeasured = remeasured, degraded = degraded.toSeq, failed = failed.toSeq,
       remeasureSkipped = skipNow && toRemeasure0.nonEmpty)
   }
 
@@ -427,8 +437,7 @@ object Bench {
   private def parseStats(path: java.nio.file.Path): Option[Map[String, QStat]] =
     try {
       val s = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-      val m = statsOfChildJson(s)
-      if (m.isEmpty) None else Some(m)
+      Some(statsOfChildJson(s))
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] child JSON refused: ${e.getMessage}")
@@ -454,10 +463,14 @@ object Bench {
     * One discarded warmup run, then `runs` timed runs, per-query
     * median of the timed runs. Between queries (never inside the
     * timed region) the session cache is dropped and a GC hinted so a
-    * query's median doesn't pay its predecessor's allocation debt. */
-  private def measureInProcess(names: Seq[String],
+    * query's median doesn't pay its predecessor's allocation debt.
+    * A query that throws on any run is a failure, not a timing: its
+    * stats are `None`, so it stays out of `total` and the medians. */
+  private[graft] def measureInProcess(names: Seq[String],
       existing: Option[SparkSession],
-      runsOverride: Option[Int] = None): Seq[(String, QStat)] = {
+      runsOverride: Option[Int] = None,
+      queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries)
+      : Seq[(String, Option[QStat])] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = runsOverride.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
@@ -466,7 +479,7 @@ object Bench {
     val warmBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_BUDGET", "12").toDouble
     val trace = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRACE", "0") == "1"
     val results = names.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
+      queries.get(name).map { fn =>
         spark.catalog.clearCache()
         // clearCache only drops SQL-cache entries; checkpoint pins
         // (localCheckpoint) are RDD-level and must be dropped
@@ -478,8 +491,7 @@ object Bench {
         System.gc()
         def once(tag: String): Double = {
           val s0 = System.nanoTime()
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val t = (System.nanoTime() - s0) / 1e9
           if (trace) System.err.println(f"[bench-trace] $name $tag $t%.3f")
           t
@@ -491,27 +503,32 @@ object Bench {
         // Cheap queries need several runs for spark-core C2 JIT in a
         // fresh JVM; a query whose first run already exceeds the
         // budget keeps the old single-warmup behavior.
-        var warm = List(once("warm1"))
-        var spent = warm.head
-        while (warm.length < warmMax && spent < warmBudget &&
-            (warm.length < 2 ||
-              math.abs(warm.head - warm(1)) > 0.25 * math.min(warm.head, warm(1)))) {
-          val t = once(s"warm${warm.length + 1}")
-          warm ::= t; spent += t
+        val stat = scala.util.Try {
+          var warm = List(once("warm1"))
+          var spent = warm.head
+          while (warm.length < warmMax && spent < warmBudget &&
+              (warm.length < 2 ||
+                math.abs(warm.head - warm(1)) > 0.25 * math.min(warm.head, warm(1)))) {
+            val t = once(s"warm${warm.length + 1}")
+            warm ::= t; spent += t
+          }
+          val times = (1 to runs).map(i => once(s"run$i")).sorted
+          QStat(times(times.length / 2), times.head, times.last, warm.length)
         }
-        val times = (1 to runs).map(i => once(s"run$i")).sorted
-        name -> QStat(times(times.length / 2), times.head, times.last, warm.length)
+        stat.failed.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+        name -> stat.toOption
       }
     }
     if (existing.isEmpty) spark.stop()
     results
   }
 
-  private def emit(results: Seq[(String, QStat)], out: String,
+  private[graft] def emit(results: Seq[(String, QStat)], out: String,
       startNanos: Long, quiet: Boolean,
       remeasured: Seq[(String, Seq[Double])] = Nil,
       partial: Boolean = false,
       degraded: Seq[String] = Nil,
+      failed: Seq[String] = Nil,
       remeasureSkipped: Boolean = false): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
@@ -553,9 +570,11 @@ object Bench {
     // under the wall budget; "remeasure_skipped" records a
     // budget-policy skip of the quiet re-measure phase
     val degr = degraded.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // queries that threw: out of "queries", "spread" and the total
+    val fail = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val jsonFull = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
       s""""sf":"$sfDir","runs":$runs,"wall":$wall,"partial":$partial,""" +
-      s""""degraded":$degr,"remeasure_skipped":$remeasureSkipped,""" +
+      s""""degraded":$degr,"failed":$fail,"remeasure_skipped":$remeasureSkipped,""" +
       s""""io_family":$ioFam,""" +
       s""""langid_family":$langidFam,"drain_family":$drainFam,"spread":$spread,""" +
       s""""remeasured":$remeas}"""
@@ -599,6 +618,7 @@ object Bench {
     // fits whole inside any tail window; the full per-query record
     // lives in the file it points at.
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},""" +
-      s""""degraded":${degraded.size},"wall":${r3(wall)},"file":"$out"}""")
+      s""""degraded":${degraded.size},"failed":${failed.size},"wall":${r3(wall)},""" +
+      s""""file":"$out"}""")
   }
 }

@@ -599,7 +599,7 @@ object SparkEntry {
       val batch = graft.sources.Price.fromWire(wire)
       graft.sources.Price.appendIdempotent(s, batch, s"$work/price")
       graft.sources.Price.appendIdempotent(s, batch, s"$work/price")
-      s.read.parquet(s"$work/price")
+      graft.sources.Price.read(s, s"$work/price")
         .select(col("address"), col("block_number"),
           col("price").cast(DoubleType).as("price"))
         .orderBy(col("block_number"))

@@ -1039,8 +1039,7 @@ object Dedup {
     // staged behind ONE (f, band, chunk) exchange shared by census
     // and both join sides — the frameless kernel's r18 treatment;
     // same byte-identical-subtree discipline (baked null filters —
-    // incl. id, r19, see [[hammingCandidates]] — census counts
-    // col("id"))
+    // incl. id, r19, see [[hammingCandidates]])
     val banded = sigs
       .filter(col("sh").isNotNull && col("f").isNotNull &&
         col("id").isNotNull)

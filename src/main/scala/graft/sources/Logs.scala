@@ -29,6 +29,17 @@ import org.apache.spark.sql.types._
   * partition, files are sorted by (address, topic0): the stand-in for
   * the reference's 9 btree indexes (`schema.sql:54-62`) via parquet
   * min/max + dictionary pushdown.
+  *
+  * Declared-schema contract: a stored table's schema is [[schema]]
+  * plus the `block_range` partition column (`LongType`), and its files
+  * are never footer-inferred. Every reader — [[read]], the append
+  * probes, [[highWaterMark]], the partition rewrites and
+  * [[Snapshots]] — opens files through [[open]], so opening a table
+  * runs no schema-inference job: it plans from the directory listing
+  * alone (which Spark distributes as a job only past
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths).
+  * Writers project to [[schema]] before writing, so the declared open
+  * and footer inference agree on every file this object writes.
   */
 object Logs {
 
@@ -112,8 +123,45 @@ object Logs {
       .withColumn("block_timestamp", col("_bts"))
       .select(schema.fieldNames.map(col): _*)
 
+  /** Stored row shape: [[schema]] in order, then the partition key. */
   private def withBlockRange(df: DataFrame): DataFrame =
-    df.withColumn("block_range", (col("block_number") / blocksPerPartition).cast(LongType))
+    df.select(schema.fieldNames.map(col) :+
+      (col("block_number") / blocksPerPartition).cast(LongType).as("block_range"): _*)
+
+  private val storedSchema: StructType = schema.add("block_range", LongType)
+
+  /** The one way stored logs files are opened: with the declared
+    * schema, `block_range` typed from the partition directories under
+    * `basePath`, result in [[schema]] column order. `paths` may be the
+    * table root, partition directories or single files; on an
+    * unpartitioned root `block_range` reads as null and is dropped. */
+  private[sources] def open(spark: SparkSession, basePath: String, paths: String*): DataFrame =
+    spark.read.schema(storedSchema).option("basePath", basePath).parquet(paths: _*)
+      .select(schema.fieldNames.map(col): _*)
+
+  private[sources] def empty(spark: SparkSession, of: StructType = schema): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), of)
+
+  private def rangeDir(tablePath: String, r: Long): String = s"$tablePath/block_range=$r"
+
+  /** The DO-NOTHING probe: rows of `incoming` whose PK is not stored in
+    * the given partitions. */
+  private def unseen(spark: SparkSession, incoming: DataFrame, tablePath: String,
+      ranges: Seq[Long]): DataFrame =
+    if (ranges.isEmpty) incoming
+    else incoming.join(
+      open(spark, tablePath, ranges.map(rangeDir(tablePath, _)): _*).select(pk.map(col): _*),
+      pk, "left_anti")
+
+  /** Appends write and probe `block_range` partitions only, so against
+    * an unpartitioned table (data files at its root, which [[read]] and
+    * [[highWaterMark]] still accept) every replayed row would look new.
+    * Refuse it loudly instead of appending duplicates. */
+  private def requirePartitioned(tablePath: String, stored: Option[Seq[Long]]): Unit =
+    if (stored.exists(_.isEmpty))
+      throw new IllegalStateException(s"$tablePath is an unpartitioned logs table " +
+        "(data files at its root): appends write block_range partitions and cannot " +
+        "dedup against it; rewrite it partitioned by block_range first")
 
   /** Every logs write goes through this writer: parquet BLOOM FILTERS
     * on `address` and `topic0` — the reference's btree-index analog
@@ -158,21 +206,19 @@ object Logs {
     val deduped = batch.dropDuplicates(pk)
     val incoming = withBlockRange(deduped)
     if (!staged) {
-      val exists = hasCommittedData(spark, tablePath)
-      // never CREATE the table from an empty batch: a parquet dir with
-      // only _SUCCESS has no footer to infer a schema from and poisons
-      // every later read (first live window with zero logs). Appending
-      // an empty `fresh` to an existing table is harmless.
-      if (!exists && incoming.isEmpty) return
-      val fresh =
-        if (exists) {
-          val ranges = incoming.select("block_range").distinct()
+      val stored = committedRanges(spark, tablePath)
+      // never CREATE the table from an empty batch: it would leave a
+      // dir with only _SUCCESS (first live window with zero logs).
+      // Appending an empty `fresh` to an existing table is harmless.
+      if (stored.isEmpty && incoming.isEmpty) return
+      requirePartitioned(tablePath, stored)
+      val fresh = stored match {
+        case Some(rs) =>
+          val touched = incoming.select("block_range").distinct()
             .collect().map(_.getLong(0))
-          val existing = spark.read.parquet(tablePath)
-            .filter(col("block_range").isin(ranges.toIndexedSeq: _*))
-            .select(pk.map(col): _*)
-          incoming.join(existing, pk, "left_anti")
-        } else incoming
+          unseen(spark, incoming, tablePath, touched.filter(rs.toSet).toIndexedSeq)
+        case None => incoming
+      }
       bloomWriter(fresh
         .repartition(col("block_range"))
         .sortWithinPartitions("address", "topic0"))
@@ -210,17 +256,12 @@ object Logs {
     underLocks(ranges.toIndexedSeq) {
       // partition-scoped anti-join: list ONLY the incoming ranges'
       // dirs (no full-table partition discovery — at 10^5 partitions
-      // the root listing dwarfed the batch) and probe just their rows
-      val existingDirs = ranges
-        .map(r => new org.apache.hadoop.fs.Path(s"$tablePath/block_range=$r"))
-        .filter(fs.exists).map(_.toString).toIndexedSeq
-      val fresh =
-        if (existingDirs.nonEmpty) {
-          val existing = spark.read.option("basePath", tablePath)
-            .parquet(existingDirs: _*)
-            .select(pk.map(col): _*)
-          incoming.join(existing, pk, "left_anti")
-        } else incoming
+      // the root listing dwarfed the batch) and probe just their rows;
+      // the root is listed only when none of them exists yet
+      val existing = ranges.filter(r =>
+        fs.exists(new org.apache.hadoop.fs.Path(rangeDir(tablePath, r)))).toIndexedSeq
+      if (existing.isEmpty) requirePartitioned(tablePath, committedRanges(spark, tablePath))
+      val fresh = unseen(spark, incoming, tablePath, existing)
       val writer = bloomWriter(fresh
         .repartition(col("block_range"))
         .sortWithinPartitions("address", "topic0"))
@@ -257,41 +298,34 @@ object Logs {
     spark.catalog.refreshByPath(tablePath)
   }
 
-  def tableExists(spark: SparkSession, tablePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
-
-  /** True once at least one data file is COMMITTED. A table dir that
+  /** The table's committed state from one root listing (no Spark job,
+    * no footer read): `None` until at least one data file is
+    * COMMITTED, else the `block_range=N` partition values — empty for
+    * an unpartitioned table (data files at the root). A table dir that
     * exists but holds only `_temporary`/`_SUCCESS` (mid-first-write, or
-    * after a crash before any job commit) has no parquet footer to
-    * infer a schema from — reading it throws. Every read path below
-    * treats that state as "empty table", so a status probe or resume
-    * racing the first micro-batch sees 0 rows instead of an
-    * AnalysisException (observed live: the StreamLogs stats loop
-    * killed the stream mid-first-batch). */
-  private def hasCommittedData(spark: SparkSession, tablePath: String): Boolean = {
+    * after a crash before any job commit) is `None`: every path below
+    * treats it as "empty table", so a status probe or resume racing
+    * the first micro-batch sees 0 rows (observed live: the StreamLogs
+    * stats loop killed the stream mid-first-batch). */
+  private def committedRanges(spark: SparkSession, tablePath: String): Option[Seq[Long]] = {
     val p = new org.apache.hadoop.fs.Path(tablePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
+    if (!fs.exists(p)) None
+    else {
       val entries = fs.listStatus(p).toSeq
-      entries.exists(e => e.isDirectory && e.getPath.getName.startsWith("block_range=")) ||
-        entries.exists(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
+      val ranges = entries.map(_.getPath.getName).collect {
+        case n if n.startsWith("block_range=") => n.stripPrefix("block_range=").toLong
+      }
+      if (ranges.nonEmpty ||
+          entries.exists(e => e.isFile && e.getPath.getName.endsWith(".parquet"))) Some(ranges)
+      else None
     }
   }
 
-  /** The table's `block_range=N` partition values, straight from the
-    * directory listing (no Spark job, no footer reads). */
-  private def listRanges(spark: SparkSession, tablePath: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("block_range="))
-      .map(_.stripPrefix("block_range=").toLong)
-  }
+  /** True once at least one data file is committed (see
+    * [[committedRanges]]); the same guard serves the `price` table. */
+  private[sources] def hasCommittedData(spark: SparkSession, tablePath: String): Boolean =
+    committedRanges(spark, tablePath).isDefined
 
   /** S4: resume point — `select max(block_number) from logs`
     * (`main.go:169`); 0 when the table is empty, matching
@@ -304,22 +338,21 @@ object Logs {
     * 10^5 ranges that's the difference between listing one directory
     * and all of them. */
   def highWaterMark(spark: SparkSession, tablePath: String): Long =
-    if (!hasCommittedData(spark, tablePath)) 0L
-    else {
-      val ranges = listRanges(spark, tablePath)
-      val scan =
-        if (ranges.isEmpty) spark.read.parquet(tablePath) // unpartitioned layout
-        else spark.read.parquet(s"$tablePath/block_range=${ranges.max}")
-      scan.agg(coalesce(max("block_number"), lit(0L))).collect()(0).getLong(0)
+    committedRanges(spark, tablePath) match {
+      case None => 0L
+      case Some(ranges) =>
+        val dir = if (ranges.isEmpty) tablePath // unpartitioned layout
+          else rangeDir(tablePath, ranges.max)
+        open(spark, tablePath, dir)
+          .agg(coalesce(max("block_number"), lit(0L))).collect()(0).getLong(0)
     }
 
   /** Read the stored table in analytic column order (drops the
     * physical block_range partition column); empty before the first
     * commit lands. */
   def read(spark: SparkSession, tablePath: String): DataFrame =
-    if (!hasCommittedData(spark, tablePath))
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else spark.read.parquet(tablePath).select(schema.fieldNames.map(col): _*)
+    if (!hasCommittedData(spark, tablePath)) empty(spark)
+    else open(spark, tablePath, tablePath)
 
   /** Compact the small files a micro-batch ingest accumulates: rewrite
     * the given block-range partitions (default: all) as a sorted,
@@ -350,19 +383,19 @@ object Logs {
       parallelism: Int = 4): Unit = {
     val root = new org.apache.hadoop.fs.Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val targetRanges = ranges.getOrElse(listRanges(spark, tablePath))
+    val targetRanges = ranges.getOrElse(committedRanges(spark, tablePath).getOrElse(Nil))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(parallelism, targetRanges.size)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     import scala.concurrent.{Await, Future}
     val jobs = targetRanges.map { r => Future {
-      val partDir = new org.apache.hadoop.fs.Path(s"$tablePath/block_range=$r")
-      val bytes = fs.getContentSummary(partDir).getLength
+      val partDir = rangeDir(tablePath, r)
+      val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(partDir)).getLength
       val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
       swapInPartition(fs, tablePath, r) { tmp =>
         bloomWriter(
-          spark.read.parquet(partDir.toString) // partition-local read; no block_range col
+          open(spark, tablePath, partDir) // analytic columns; no block_range col
             .dropDuplicates(pk)
             .repartition(nFiles)
             .sortWithinPartitions("address", "topic0"))
@@ -460,7 +493,7 @@ object Logs {
     * serialize, disjoint-partition rewrites don't contend. */
   private def swapInPartition(fs: org.apache.hadoop.fs.FileSystem, tablePath: String,
       r: Long)(write: String => Unit): Unit = withPartitionLock(fs, tablePath, r) {
-    val partDir = new org.apache.hadoop.fs.Path(s"$tablePath/block_range=$r")
+    val partDir = new org.apache.hadoop.fs.Path(rangeDir(tablePath, r))
     val tmp = new org.apache.hadoop.fs.Path(s"$tablePath/.graft_compact_tmp/block_range=$r")
     val bak = new org.apache.hadoop.fs.Path(s"$tablePath/.graft_compact_bak/block_range=$r")
     fs.delete(tmp, true)
@@ -570,24 +603,25 @@ object Logs {
         .repartition(col("block_range"))
         .sortWithinPartitions("address", "topic0"))
       .mode("append").partitionBy("block_range").parquet(tablePath)
-    if (!hasCommittedData(spark, tablePath)) {
+    val stored = committedRanges(spark, tablePath)
+    if (stored.isEmpty) {
       if (!incoming.isEmpty) writeFresh(incoming)
       return
     }
+    requirePartitioned(tablePath, stored)
     val root = new org.apache.hadoop.fs.Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stored = listRanges(spark, tablePath).toSet
     val touched = incoming.select("block_range").distinct().collect()
       .map(_.getAs[Number](0).longValue())
-    val (overlapping, fresh) = touched.partition(stored)
+    val (overlapping, fresh) = touched.partition(stored.get.toSet)
     if (fresh.nonEmpty)
       writeFresh(incoming.filter(col("block_range").isin(fresh.toIndexedSeq: _*)))
     overlapping.foreach { r =>
-      val partDir = new org.apache.hadoop.fs.Path(s"$tablePath/block_range=$r")
-      val nFiles = math.max(1L,
-        (fs.getContentSummary(partDir).getLength + (512L << 20) - 1) / (512L << 20)).toInt
+      val partDir = rangeDir(tablePath, r)
+      val nFiles = math.max(1L, (fs.getContentSummary(new org.apache.hadoop.fs.Path(partDir))
+        .getLength + (512L << 20) - 1) / (512L << 20)).toInt
       val merged = latestPerPk(
-        spark.read.parquet(partDir.toString)
+        open(spark, tablePath, partDir)
           .unionByName(incoming.filter(col("block_range") === r).drop("block_range")))
       swapInPartition(fs, tablePath, r) { tmp =>
         bloomWriter(merged.repartition(nFiles)

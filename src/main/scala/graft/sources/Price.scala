@@ -61,17 +61,24 @@ object Price {
       }
       .start()
 
+  /** The stored table, opened with its declared [[schema]] (never
+    * footer-inferred, so opening it runs no Spark job); empty before
+    * the first committed write. */
+  def read(spark: SparkSession, tablePath: String): DataFrame =
+    if (!Logs.hasCommittedData(spark, tablePath)) Logs.empty(spark, schema)
+    else spark.read.schema(schema).parquet(tablePath)
+
   /** S6: idempotent append, PK DO-NOTHING semantics
     * (`get_price.go:96`). Dimension-sized table — plain anti-join. */
   def appendIdempotent(spark: SparkSession, batch: DataFrame, tablePath: String): Unit = {
-    val deduped = batch.dropDuplicates(pk)
-    val exists = Logs.tableExists(spark, tablePath)
-    // same empty-first-write guard as Logs.appendIdempotent: a table
-    // created with no rows has no readable schema
+    val deduped = batch.select(schema.fieldNames.map(col): _*).dropDuplicates(pk)
+    // the committed-data guard of Logs.appendIdempotent: a dir holding
+    // only _temporary/_SUCCESS (a crashed first write) is an empty
+    // table, and an empty batch never creates the table
+    val exists = Logs.hasCommittedData(spark, tablePath)
     if (!exists && deduped.isEmpty) return
     val fresh =
-      if (exists)
-        deduped.join(spark.read.parquet(tablePath).select(pk.map(col): _*), pk, "left_anti")
+      if (exists) deduped.join(read(spark, tablePath).select(pk.map(col): _*), pk, "left_anti")
       else deduped
     fresh.write.mode("append").parquet(tablePath)
   }

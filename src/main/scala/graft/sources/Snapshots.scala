@@ -214,31 +214,31 @@ object Snapshots {
     files(spark, tablePath, version).forall(f => resolve(fs, tablePath, f).isDefined)
   }
 
-  /** Read exactly one version's file set (default: latest). Pinned
-    * files resolve to their live location or, after an in-place
-    * rewrite, the retention area — each group read with its own
-    * `basePath` (keeps `block_range` derivable) and unioned. */
+  /** Read exactly one version's file set (default: latest). */
   def read(spark: SparkSession, tablePath: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, tablePath))
       .getOrElse(throw new IllegalStateException(s"no snapshots at $tablePath"))
+    readFiles(spark, tablePath, v, files(spark, tablePath, v))
+  }
+
+  /** Some of version `v`'s pinned files, in analytic column order.
+    * Each file resolves to its live location or, after an in-place
+    * rewrite, the retention area; each group opens through
+    * [[Logs.open]] with its own `basePath` (keeps `block_range`
+    * derivable) and the groups are unioned. */
+  private def readFiles(spark: SparkSession, tablePath: String, v: Long,
+      names: Seq[String]): DataFrame = {
     val fs = fsOf(spark, tablePath)
-    val resolved = files(spark, tablePath, v).map { f =>
+    val resolved = names.map { f =>
       resolve(fs, tablePath, f).getOrElse(
         throw new IllegalStateException(
           s"snapshot v$v of $tablePath references vacuumed/missing file $f"))
     }
     val (retained, live) = resolved.partition(_.startsWith(retainedDir(tablePath)))
-    val analytic = Logs.schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq
-    def group(paths: Seq[String], base: String): Option[DataFrame] =
-      if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", base).parquet(paths: _*).select(analytic: _*))
-    (group(live, tablePath), group(retained, retainedDir(tablePath))) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case (None, None) =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), Logs.schema)
-    }
+    Seq(tablePath -> live, retainedDir(tablePath) -> retained)
+      .collect { case (base, paths) if paths.nonEmpty => Logs.open(spark, base, paths: _*) }
+      .reduceOption(_ unionByName _)
+      .getOrElse(Logs.empty(spark))
   }
 
   /** Row-level diff of two snapshot versions, PLANNED FROM THE
@@ -264,35 +264,15 @@ object Snapshots {
     * empty. `diff(v, v)` is empty by construction (no files differ). */
   def diff(spark: SparkSession, tablePath: String, vOld: Long, vNew: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fs = fsOf(spark, tablePath)
     val fo = files(spark, tablePath, vOld)
     val fn = files(spark, tablePath, vNew)
     val common = fo.toSet.intersect(fn.toSet)
-    def side(names: Seq[String], v: Long): DataFrame = {
-      val resolved = names.map { f =>
-        resolve(fs, tablePath, f).getOrElse(
-          throw new IllegalStateException(
-            s"snapshot v$v of $tablePath references vacuumed/missing file $f"))
-      }
-      val (retained, live) = resolved.partition(_.startsWith(retainedDir(tablePath)))
-      val analytic = Logs.schema.fieldNames.map(col).toSeq
-      def group(paths: Seq[String], base: String): Option[DataFrame] =
-        if (paths.isEmpty) None
-        else Some(spark.read.option("basePath", base).parquet(paths: _*).select(analytic: _*))
-      (group(live, tablePath), group(retained, retainedDir(tablePath))) match {
-        case (Some(a), Some(b)) => a.unionByName(b)
-        case (Some(a), None) => a
-        case (None, Some(b)) => b
-        case (None, None) =>
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), Logs.schema)
-      }
-    }
-    val key = Seq("block_hash", "transaction_hash", "log_index")
+    val key = Logs.pk
     val payload = Logs.schema.fieldNames.filterNot(key.contains).toSeq
     def keyed(df: DataFrame, tag: String): DataFrame =
       df.select(key.map(col) :+ struct(payload.map(col): _*).as(s"_p$tag"): _*)
-    keyed(side(fo.filterNot(common), vOld), "o")
-      .join(keyed(side(fn.filterNot(common), vNew), "n"), key, "full_outer")
+    keyed(readFiles(spark, tablePath, vOld, fo.filterNot(common)), "o")
+      .join(keyed(readFiles(spark, tablePath, vNew, fn.filterNot(common)), "n"), key, "full_outer")
       .withColumn("status",
         when(col("_po").isNull, lit("added"))
           .when(col("_pn").isNull, lit("removed"))

@@ -15,7 +15,7 @@ object IngestPrices {
     val spark = GraftSession.get()
     val q = Price.ingest(spark, in, table, ckpt)
     q.awaitTermination()
-    val t = spark.read.parquet(table)
+    val t = Price.read(spark, table)
     println(s"[prices] rows=${t.count()}")
     t.orderBy("address", "block_number").show(20, truncate = false)
     spark.stop()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
-import graft.sources.{Logs, Rpc}
+import graft.sources.{Logs, Price, Rpc}
 
 /** CLI: the LIVE ingestion loop — poll an EVM JSON-RPC endpoint for
   * logs (and, with token/oracle pairs, per-window `eth_call` price
@@ -42,8 +42,7 @@ object PollLogs {
     val last = Rpc.ingestLoop(spark, cfg, table)
     println(s"[poll] done lastBlock=$last rows=${Logs.read(spark, table).count()} " +
       s"hwm=${Logs.highWaterMark(spark, table)}" +
-      cfg.priceTable.filter(Logs.tableExists(spark, _)).map(pt =>
-        s" priceRows=${spark.read.parquet(pt).count()}").getOrElse(""))
+      cfg.priceTable.map(pt => s" priceRows=${Price.read(spark, pt).count()}").getOrElse(""))
     spark.stop()
   }
 }

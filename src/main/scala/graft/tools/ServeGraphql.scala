@@ -4,7 +4,7 @@ import graft.GraftSession
 import graft.functions.Abi
 import graft.operators.EventViews
 import graft.serving.GraphQL
-import graft.sources.Logs
+import graft.sources.{Logs, Price}
 
 /** CLI: the GraphQL serving surface — the reference's E3 Postgraphile
   * layer (`docker-compose.yaml:46-72`) over Spark. Registers the same
@@ -32,7 +32,7 @@ object ServeGraphql {
       else Logs.read(spark, logsPath)
     logs.createOrReplaceTempView("logs")
     Logs.canonical(logs).createOrReplaceTempView("logs_canonical")
-    pricePath.foreach(p => spark.read.parquet(p).createOrReplaceTempView("price"))
+    pricePath.foreach(p => Price.read(spark, p).createOrReplaceTempView("price"))
     Abi.registerSqlFunctions(spark)
     EventViews.registerAll(spark, Logs.canonical(logs))
     // relations DERIVED from the key-column convention (Postgraphile

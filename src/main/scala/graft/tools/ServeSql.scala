@@ -3,7 +3,7 @@ package graft.tools
 import graft.GraftSession
 import graft.functions.Abi
 import graft.operators.EventViews
-import graft.sources.Logs
+import graft.sources.{Logs, Price}
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
 
 /** CLI: the query-serving surface — reference lifecycle E3. The
@@ -57,7 +57,7 @@ object ServeSql {
     }
     logs.createOrReplaceTempView("logs")
     Logs.canonical(logs).createOrReplaceTempView("logs_canonical")
-    pricePath.foreach(p => spark.read.parquet(p).createOrReplaceTempView("price"))
+    pricePath.foreach(p => Price.read(spark, p).createOrReplaceTempView("price"))
     Abi.registerSqlFunctions(spark)
     EventViews.registerAll(spark, Logs.canonical(logs))
     val chains = args.lift(4).filterNot(_ == "-")
