@@ -8,8 +8,10 @@ graft.Verify (parquet in <outDir>/<name>/), run the matching SQL from
 <outDir>/oracle_sql.json in DuckDB over the same parquet tables, then
 compare after sorting columns by name and rows by all values.
 
-Exit 0 iff every query with an oracle matches exactly. Queries without
-an oracle entry are listed as rows-only (count shown).
+Exit 0 iff every query with an oracle matches exactly. A key of
+oracle_sql.json with no result dir fails (its query threw, or was not
+dumped). Queries without an oracle entry are listed as rows-only
+(count shown).
 """
 import glob
 import json
@@ -74,7 +76,9 @@ def main(sf_dir, out_dir):
     import os
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(f"{out_dir}/{d}"))
-    failed = []
+    failed = sorted(k for k in oracle if k not in names)
+    for name in failed:
+        print(f"  ✗ {name}: no result dir (the query failed or was not dumped)")
     for name in names:
         got_rel = con.sql(f"select * from read_parquet('{out_dir}/{name}/*.parquet')")
         if name not in oracle:

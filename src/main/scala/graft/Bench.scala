@@ -296,7 +296,7 @@ object Bench {
           // a "degraded" family could silently get 3 timed runs and
           // the artifact misstated how it was measured)
           measureInProcess(fam,
-            spark.orElse { spark = Some(buildSession()); spark },
+            spark.orElse { spark = Some(GraftSession.get()); spark },
             runsOverride = if (degrade) Some(1) else None).foreach {
             case (n, Some(st)) => results(n) = st
             case (n, None) => failed += n
@@ -444,21 +444,6 @@ object Bench {
         None
     }
 
-  private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Child / legacy mode: measure the given queries in this JVM.
     * One discarded warmup run, then `runs` timed runs, per-query
     * median of the timed runs. Between queries (never inside the
@@ -474,7 +459,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = runsOverride.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = existing.getOrElse(buildSession())
+    val spark = existing.getOrElse(GraftSession.get())
     val warmMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_MAX", "6").toInt.max(1)
     val warmBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_BUDGET", "12").toDouble
     val trace = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRACE", "0") == "1"

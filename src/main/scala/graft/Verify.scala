@@ -1,24 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet under
+  * `<outDir>/<name>/`, plus `oracle_sql.json` (the oracle SQL of the
+  * dumped queries) for a DuckDB compare (`scripts/check_oracle.py`).
+  * A query that throws leaves no result dir, and Verify exits 1
+  * naming every such query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder()
       // dump timestamps as TIMESTAMP_MICROS: the driver's pandas
       // comparator reads parquet ns-timestamps as datetime64[ns] but
       // DuckDB results as datetime64[us] — dtype mismatch fails the
       // hash even when instants are equal (q13, round 1)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -30,11 +25,16 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      // a dir left by an earlier run must not stand in for this one's
+      val dir = new java.io.File(s"$outDir/$name")
+      org.apache.hadoop.fs.FileUtil.fullyDelete(dir)
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.getPath)
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,8 +50,13 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

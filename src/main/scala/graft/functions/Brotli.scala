@@ -189,7 +189,6 @@ object Brotli {
         i += 1
       }
     }
-    def atEnd: Boolean = bytePos >= in.length && bitCnt == 0
   }
 
   // ---- canonical prefix codes --------------------------------------

@@ -163,9 +163,6 @@ object KeccakRuntime {
     sb.toString
   }
 
-  def hash256Binary(msg: Array[Byte]): Array[Byte] =
-    if (msg == null) null else hash256(msg)
-
   /** `0x` + 64 hex chars of keccak256(utf8 signature) — the event
     * topic0 format the logs tables store. */
   def topicHex(sig: UTF8String): UTF8String =

@@ -44,10 +44,6 @@ object Text {
     size(regexp_extract_all(c, lit("[0-9]"), lit(0))).cast(DoubleType) /
       greatest(length(c), lit(1)).cast(DoubleType)
 
-  def upperRatio(c: Column): Column =
-    size(regexp_extract_all(c, lit("[A-Z]"), lit(0))).cast(DoubleType) /
-      greatest(length(c), lit(1)).cast(DoubleType)
-
   def avgTokenLen(c: Column): Column =
     length(c).cast(DoubleType) / greatest(tokenCount(c), lit(1)).cast(DoubleType)
 
@@ -580,8 +576,4 @@ object Text {
     * normalization. md5-based so the oracle can reproduce it. */
   def rollingFingerprintFromNormalized(n: Column, k: Int = 16, stride: Int = 4): Column =
     array_min(transform(stridedNgramsFromNormalized(n, k, stride), g => md5(g)))
-
-  /** One-shot convenience; stage [[normalized]] first in hot paths. */
-  def rollingFingerprint(c: Column, k: Int = 16): Column =
-    rollingFingerprintFromNormalized(normalized(c), k)
 }

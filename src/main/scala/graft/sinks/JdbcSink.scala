@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
@@ -286,12 +286,9 @@ object JdbcSink {
       rangeCol: String,
       props: Properties = new Properties(),
       pollInterval: Option[String] = None): StreamingQuery = {
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(graft.streaming.triggerOf(pollInterval))
       .foreachBatch { (b: DataFrame, _: Long) =>
         appendIdempotent(b, url, table, pk, props, Some(rangeCol))
       }

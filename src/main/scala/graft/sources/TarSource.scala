@@ -119,7 +119,7 @@ object TarSource {
       * maxFilesPerTrigger admission, AvailableNow drain-target
       * freeze, vanished-file refusal), through the SAME per-file
       * reader incl. payload-skipping column pruning. The natural feed
-      * for `DocStream.curateImageNearDup`: arriving media shards
+      * for `DocStream.curateMediaNearDup`: arriving media shards
       * stream straight into incremental perceptual dedup. */
     override def toMicroBatchStream(
         checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.sources.Logs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming rendering of the reference's ingestion loop
   * (`main.go:200-242`) and its streaming semantics (SURVEY §2.10).
@@ -67,13 +67,10 @@ object LogStream {
       pollInterval: Option[String] = None,
       canonicalize: Boolean = false,
       onBatch: DataFrame => Unit = _ => ()): StreamingQuery = {
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
     wireStream(spark, inputDir, maxFilesPerTrigger).writeStream
       .queryName("graft_logs_ingest")
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(triggerOf(pollInterval))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // replayed batches re-run on failure → the PK anti-join makes
         // the append idempotent (exactly-once effect)

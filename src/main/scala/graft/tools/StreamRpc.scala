@@ -3,7 +3,6 @@ package graft.tools
 import graft.GraftSession
 import graft.sources.{Logs, RpcSource}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 
 /** CLI: live tail-follow through the DataSource V2 streaming source —
   * the reference's unbounded loop (`main.go:217-241`) as pure
@@ -20,7 +19,7 @@ object StreamRpc {
   def main(args: Array[String]): Unit = {
     val Array(endpoint, table, ckpt) = args.take(3)
     val step = args.lift(3).getOrElse("100")
-    val poll = args.lift(4).filterNot(_ == "-").map(s => Trigger.ProcessingTime(s"$s seconds"))
+    val poll = args.lift(4).filterNot(_ == "-").map(s => s"$s seconds")
     val spark = GraftSession.get()
     val q = spark.readStream.format(RpcSource.Format)
       .option("endpoint", endpoint)
@@ -31,7 +30,7 @@ object StreamRpc {
       .load()
       .writeStream
       .option("checkpointLocation", ckpt)
-      .trigger(poll.getOrElse(Trigger.AvailableNow()))
+      .trigger(graft.streaming.triggerOf(poll))
       .foreachBatch { (b: DataFrame, _: Long) =>
         Logs.appendIdempotent(b.sparkSession, b, table)
       }

@@ -287,9 +287,9 @@ class StreamingSpec extends SparkSpec {
     def arrive(rows: Seq[(Long, Array[Byte])]): Unit =
       rows.toDF("doc_id", "content").coalesce(1).write.mode("append").parquet(in)
     val schema = new StructType().add("doc_id", LongType).add("content", BinaryType)
-    def drain(): Unit = DocStream.curateImageNearDup(spark,
+    def drain(): Unit = DocStream.curateMediaNearDup(spark,
       spark.readStream.schema(schema).parquet(in),
-      corpus, index, ckpt, maxDistance = 0).awaitTermination()
+      corpus, index, ckpt, kind = "image", maxDistance = 0).awaitTermination()
     def corpusIds() = spark.read.parquet(corpus)
       .select("doc_id").as[Long].collect().toSet
     arrive(Seq(1L -> png(13), 2L -> png(7)))
@@ -381,6 +381,54 @@ class StreamingSpec extends SparkSpec {
     assert(vIds() === Set(1L, 2L))
   }
 
+  test("streaming media curation converges: lagging-index repair and marker-loss rebuild") {
+    import graft.streaming.DocStream
+    import graft.operators.Multimodal.MiniEncoder
+    import org.apache.spark.sql.types.{BinaryType, LongType, StructType}
+    val in = Files.createTempDirectory("mrep_in").toString
+    val corpus = Files.createTempDirectory("mrep_corpus").toString + "/corpus"
+    val index = Files.createTempDirectory("mrep_idx").toString + "/idx"
+    def png(a: Int) = MiniEncoder.pngGray(18, 16, (x, y) => (x * a + y * (a + 5)) % 256)
+    def arrive(rows: Seq[(Long, Array[Byte])]): Unit =
+      rows.toDF("doc_id", "content").coalesce(1).write.mode("append").parquet(in)
+    val schema = new StructType().add("doc_id", LongType).add("content", BinaryType)
+    // every drain runs on a FRESH checkpoint: the whole input replays,
+    // as after a crash that lost the checkpoint too
+    def drain(): Unit = DocStream.curateMediaNearDup(spark,
+      spark.readStream.schema(schema).parquet(in), corpus, index,
+      Files.createTempDirectory("mrep_ckpt").toString,
+      kind = "image", maxDistance = 0).awaitTermination()
+    def corpusIds() = spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet
+    def indexIds() = spark.read.parquet(index).select("id").as[Long].collect().toSet
+    arrive(Seq(1L -> png(13), 2L -> png(7)))
+    drain()
+    assert(corpusIds() === Set(1L, 2L))
+    // the crash window between the two writes: corpus holds doc 2, the
+    // index lost it, the marker survived (lag, not a missing index)
+    val fs = new org.apache.hadoop.fs.Path(index)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = graft.util.IndexMarker.read(fs, index).get
+    val lagged = spark.read.parquet(index).filter(col("id") =!= 2L)
+      .localCheckpoint(true) // pin BEFORE overwriting the path it reads
+    lagged.write.mode("overwrite").parquet(index)
+    marker.write(fs, index)
+    spark.catalog.refreshByPath(index)
+    assert(indexIds() === Set(1L))
+    // a copy of the UNINDEXED doc 2 dies: the repair lands before the decision
+    arrive(Seq(3L -> png(7)))
+    drain()
+    assert(corpusIds() === Set(1L, 2L))
+    assert(indexIds() === Set(1L, 2L))
+    // marker gone: the index is rebuilt from the corpus's signature
+    // rows, and a copy of the early doc 1 is still caught
+    fs.delete(graft.util.IndexMarker.markerPath(index), false)
+    arrive(Seq(4L -> png(13), 5L -> png(29)))
+    drain()
+    assert(fs.exists(graft.util.IndexMarker.markerPath(index)))
+    assert(corpusIds() === Set(1L, 2L, 5L))
+    assert(indexIds() === corpusIds())
+  }
+
   test("stale index over a deleted corpus is overwritten, not appended into (no ghost ids)") {
     // r13 (advisor): corpus deleted but index+marker left behind →
     // the batch is deduped via the index-IGNORING branch, yet the
@@ -399,9 +447,9 @@ class StreamingSpec extends SparkSpec {
     def arrive(in: String, rows: Seq[(Long, Array[Byte])]): Unit =
       rows.toDF("doc_id", "content").coalesce(1).write.mode("append").parquet(in)
     val schema = new StructType().add("doc_id", LongType).add("content", BinaryType)
-    def drain(in: String, ckpt: String): Unit = DocStream.curateImageNearDup(spark,
+    def drain(in: String, ckpt: String): Unit = DocStream.curateMediaNearDup(spark,
       spark.readStream.schema(schema).parquet(in),
-      corpus, index, ckpt, maxDistance = 0).awaitTermination()
+      corpus, index, ckpt, kind = "image", maxDistance = 0).awaitTermination()
     arrive(in1, Seq(1L -> png(13), 2L -> png(7)))
     drain(in1, Files.createTempDirectory("ghost_ck1").toString)
     assert(spark.read.parquet(index).select("id").as[Long].collect().toSet === Set(1L, 2L))
@@ -786,9 +834,9 @@ class StreamingSpec extends SparkSpec {
     def arrive(rows: Seq[(Long, Array[Byte])]): Unit =
       rows.toDF("doc_id", "content").coalesce(1).write.mode("append").parquet(in)
     val schema = new StructType().add("doc_id", LongType).add("content", BinaryType)
-    def drain(): Unit = DocStream.curateImageNearDup(spark,
+    def drain(): Unit = DocStream.curateMediaNearDup(spark,
       spark.readStream.schema(schema).parquet(in),
-      corpus, index, ckpt, maxDistance = 0,
+      corpus, index, ckpt, kind = "image", maxDistance = 0,
       indexBands = 8, indexRanges = 16).awaitTermination()
     def corpusIds() = spark.read.parquet(corpus)
       .select("doc_id").as[Long].collect().toSet

@@ -376,10 +376,10 @@ class TarShardsSpec extends SparkSpec {
     def shardRows(rows: Seq[(Long, Array[Byte])]) =
       rows.toDF("doc_id", "content").select(
         col("doc_id").cast("string").as("k"), col("content").as("p"))
-    def drain(): Unit = graft.streaming.DocStream.curateImageNearDup(spark,
+    def drain(): Unit = graft.streaming.DocStream.curateMediaNearDup(spark,
       spark.readStream.format("graft.sources.TarSource").option("path", dir).load()
         .select(col("key").cast("long").as("doc_id"), col("payload").as("content")),
-      corpus, index, ckpt, maxDistance = 0).awaitTermination()
+      corpus, index, ckpt, kind = "image", maxDistance = 0).awaitTermination()
     graft.sinks.TarShards.write(shardRows(Seq(1L -> png(13), 2L -> png(7))),
       "k", "p", "png", dir, nShards = 1)
     drain()
