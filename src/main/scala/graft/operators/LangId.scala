@@ -285,9 +285,12 @@ object LangId {
       .toDF("lang", "q_prior", "q_floor", "_lidx")
     // collisions within one language sum — same contract as q100;
     // the broadcast rows carry the per-language constants and the
-    // packed index instead of the code string
+    // packed index instead of the code string. The packed argmax needs
+    // every qdw > 0 (see above): a weight row that breaks it fails the
+    // query while the broadcast side is built, with no extra job.
     val wb = broadcast(weights
-      .groupBy(col("lang"), col("bucket")).agg(sum(col("qdw")).as("qdw"))
+      .groupBy(col("lang"), col("bucket")).agg(sum(when(col("qdw") > 0, col("qdw"))
+        .otherwise(raise_error(lit(NonPositiveQdw)))).as("qdw"))
       .join(idxDf, Seq("lang"))
       .select(col("bucket"), col("qdw"), col("_lidx"),
         col("q_prior"), col("q_floor")))
@@ -369,8 +372,8 @@ object LangId {
     out.close()
   }
 
-  /** Load a [[save]]d model. Refuses blind loads (no marker) and
-    * foreign families loudly. */
+  /** Load a [[save]]d model. Refuses blind loads (no marker), foreign
+    * families and a weight `qdw <= 0` loudly. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Quantized = {
     val p = new org.apache.hadoop.fs.Path(path, "_langid.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -402,8 +405,15 @@ object LangId {
     val weights = spark.read.parquet(s"$path/weights")
       .select(col("lang"), col("bucket"), col("qdw")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    require(weights.forall(_._3 > 0), s"model at $path: $NonPositiveQdw")
     Quantized(langs, weights, dim, ns, scale, hashFamily)
   }
+
+  /** [[train]] and [[quantize]] keep only deltas `dw > 0`, and
+    * [[classifyQuantized]]'s packed argmax is exact only under that
+    * invariant, so a model that breaks it is refused. */
+  private val NonPositiveQdw =
+    "a weight row has qdw <= 0; classifyQuantized needs every qdw > 0"
 
   private def langTableOf(spark: org.apache.spark.sql.SparkSession,
       q: Quantized): DataFrame = {

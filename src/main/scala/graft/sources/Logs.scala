@@ -24,11 +24,14 @@ import org.apache.spark.sql.types._
   * Scale design: the table is laid out as Parquet partitioned by
   * `block_range` (block_number / blocksPerPartition). Every operation
   * here — idempotent append's anti-join, the high-water-mark scan,
-  * reorg dedup — prunes to the block partitions it touches, so cost
-  * tracks batch size, not table size (100 TB-safe). Within a
-  * partition, files are sorted by (address, topic0): the stand-in for
-  * the reference's 9 btree indexes (`schema.sql:54-62`) via parquet
-  * min/max + dictionary pushdown.
+  * reorg dedup — prunes to the block partitions it touches. An append
+  * costs its batch, not the table: the batch is evaluated once and its
+  * pin released on exit, throw included ([[pinned]]), and the DO-NOTHING
+  * probe reads only the batch's block window, exact by the PK →
+  * `block_number` rule ([[Pinned.unseen]]). Within a partition, files
+  * are sorted by (address, topic0): the stand-in for the reference's 9
+  * btree indexes (`schema.sql:54-62`) via parquet min/max + dictionary
+  * pushdown.
   *
   * Declared-schema contract: a stored table's schema is [[schema]]
   * plus the `block_range` partition column (`LongType`), and its files
@@ -144,14 +147,45 @@ object Logs {
 
   private def rangeDir(tablePath: String, r: Long): String = s"$tablePath/block_range=$r"
 
-  /** The DO-NOTHING probe: rows of `incoming` whose PK is not stored in
-    * the given partitions. */
-  private def unseen(spark: SparkSession, incoming: DataFrame, tablePath: String,
+  /** One append's input after [[pinned]]: `n` rows read from the pin,
+    * `block_number` window `[lo, hi]`, sorted `block_range` values
+    * `ranges` (empty without that column, as for a `price` batch). */
+  private[sources] final case class Pinned(rows: DataFrame, n: Long, lo: Long, hi: Long,
+      ranges: Seq[Long]) {
+    /** The DO-NOTHING probe: rows whose `key` is not in `stored`, read
+      * only inside `[lo, hi]`. Exact because the key fixes the block (a
+      * logs PK's `block_hash` names one block; a price PK holds
+      * `block_number`); the window is pushed into parquet, so row groups
+      * other batches wrote are skipped on their min/max stats. */
+    def unseen(stored: DataFrame, key: Seq[String]): DataFrame =
+      rows.join(stored.filter(col("block_number").between(lo, hi)).select(key.map(col): _*),
+        key, "left_anti")
+  }
+
+  /** Evaluate `batch` exactly once: one `localCheckpoint` pass pins its
+    * rows and gathers its [[Pinned]] facts (`observe`), so the emptiness
+    * test, the ranges, the probe and the write read the pin instead of
+    * re-running the upstream (RPC fetch, JSON parse, dedup shuffle). The
+    * pin is released when `body` returns or throws. */
+  private[sources] def pinned[T](batch: DataFrame)(body: Pinned => T): T = {
+    val facts = Seq(count(lit(1)), coalesce(min("block_number"), lit(0L)),
+      coalesce(max("block_number"), lit(-1L))) ++
+      (if (batch.columns.contains("block_range")) Seq(collect_set("block_range")) else Nil)
+    val observed = batch.observe("graft_append_facts", facts.head, facts.tail: _*)
+    val rows = observed.localCheckpoint(eager = true)
+    try {
+      val f = observed.queryExecution.observedMetrics("graft_append_facts")
+      body(Pinned(rows, f.getLong(0), f.getLong(1), f.getLong(2),
+        if (f.length > 3) f.getSeq[Long](3).sorted else Nil))
+    } finally graft.Pins.release(rows)
+  }
+
+  /** [[Pinned.unseen]] against the stored `ranges` of the logs table;
+    * no probe at all when the batch touches no stored range. */
+  private def unseen(spark: SparkSession, b: Pinned, tablePath: String,
       ranges: Seq[Long]): DataFrame =
-    if (ranges.isEmpty) incoming
-    else incoming.join(
-      open(spark, tablePath, ranges.map(rangeDir(tablePath, _)): _*).select(pk.map(col): _*),
-      pk, "left_anti")
+    if (ranges.isEmpty) b.rows
+    else b.unseen(open(spark, tablePath, ranges.map(rangeDir(tablePath, _)): _*), pk)
 
   /** Appends write and probe `block_range` partitions only, so against
     * an unpartitioned table (data files at its root, which [[read]] and
@@ -182,11 +216,18 @@ object Logs {
       .option("parquet.bloom.filter.enabled#topic0", "true")
       .option("parquet.bloom.filter.expected.ndv#topic0", "10000")
 
+  /** The append layout: one file per touched range per call, sorted by
+    * (address, topic0), partitioned by `block_range`. */
+  private def rangeWriter(rows: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+    bloomWriter(rows.repartition(col("block_range")).sortWithinPartitions("address", "topic0"))
+      .partitionBy("block_range")
+
   /** S5: idempotent append — the engine's `INSERT … ON CONFLICT DO
-    * NOTHING`. New rows are anti-joined against ONLY the existing
-    * block-range partitions the batch overlaps (partition pruning keeps
-    * this O(batch), not O(table)), then appended partitioned by
-    * block_range and sorted by (address, topic0) within files.
+    * NOTHING`. The PK-deduped batch is evaluated once ([[pinned]]), its
+    * rows anti-joined against ONLY the stored block-range partitions it
+    * overlaps, inside its block window ([[Pinned.unseen]]), then appended
+    * partitioned by block_range, sorted by (address, topic0) within
+    * files. An empty batch writes nothing and never creates the table.
     *
     * `staged = true` is the CONCURRENT-WRITER form (the reference runs
     * any number of parallel archivers against Postgres; per-chain
@@ -201,51 +242,33 @@ object Logs {
     * and compaction dedup by PK, same as re-delivered batches. Pair
     * with [[Snapshots.commitWithRetry]] for the snapshot step. */
   def appendIdempotent(spark: SparkSession, batch: DataFrame, tablePath: String,
-      canonicalize: Boolean = false, staged: Boolean = false): Unit = {
-    if (canonicalize) return appendCanonical(spark, batch, tablePath)
-    val deduped = batch.dropDuplicates(pk)
-    val incoming = withBlockRange(deduped)
-    if (!staged) {
-      val stored = committedRanges(spark, tablePath)
-      // never CREATE the table from an empty batch: it would leave a
-      // dir with only _SUCCESS (first live window with zero logs).
-      // Appending an empty `fresh` to an existing table is harmless.
-      if (stored.isEmpty && incoming.isEmpty) return
-      requirePartitioned(tablePath, stored)
-      val fresh = stored match {
-        case Some(rs) =>
-          val touched = incoming.select("block_range").distinct()
-            .collect().map(_.getLong(0))
-          unseen(spark, incoming, tablePath, touched.filter(rs.toSet).toIndexedSeq)
-        case None => incoming
+      canonicalize: Boolean = false, staged: Boolean = false): Unit =
+    if (canonicalize) appendCanonical(spark, batch, tablePath)
+    else pinned(withBlockRange(batch.dropDuplicates(pk))) { b =>
+      if (b.n > 0 && staged) appendStaged(spark, b, tablePath)
+      else if (b.n > 0) {
+        val stored = committedRanges(spark, tablePath)
+        requirePartitioned(tablePath, stored)
+        rangeWriter(unseen(spark, b, tablePath, b.ranges.filter(stored.getOrElse(Nil).toSet)))
+          .mode("append").parquet(tablePath)
       }
-      bloomWriter(fresh
-        .repartition(col("block_range"))
-        .sortWithinPartitions("address", "topic0"))
-        .partitionBy("block_range")
-        .mode("append").parquet(tablePath)
-      return
     }
 
-    // Staged (concurrent-writer) form, serialized per partition
-    // against in-place rewrites (r11): the anti-join read, the staged
-    // write and the publish renames all run under the SAME per-range
-    // lock `Logs.compact`/canonicalization swap under — closing two
-    // real race windows the SnapshotsSpec stress tests sat on top of:
-    // (1) a publish rename re-creating a partition dir the swap just
-    // parked (both swap renames then fail), and (2) a staged file
-    // landing between the rewrite's read and its park, getting parked
-    // with the originals and silently vanishing from the live table.
-    // Appends hold the lock for seconds (batch-sized work), so
-    // rewriters WAIT for append holders rather than failing fast; an
-    // appender waits for anyone (a partition rewrite is minutes at
-    // worst, and its own data isn't visible until the renames anyway).
-    // Lock order is ascending by range — multi-range appenders can
-    // never deadlock each other.
-    val ranges = incoming.select("block_range").distinct()
-      .collect().map(_.getLong(0)).sorted
-    // empty batch: nothing to stage (and never CREATE a table from one)
-    if (ranges.isEmpty) return
+  /** Staged (concurrent-writer) form, serialized per partition against
+    * in-place rewrites (r11): the anti-join read, the staged write and
+    * the publish renames all run under the SAME per-range lock
+    * `Logs.compact`/canonicalization swap under — closing two real race
+    * windows the SnapshotsSpec stress tests sat on top of: (1) a publish
+    * rename re-creating a partition dir the swap just parked (both swap
+    * renames then fail), and (2) a staged file landing between the
+    * rewrite's read and its park, getting parked with the originals and
+    * silently vanishing from the live table. Appends hold the lock for
+    * seconds (batch-sized work), so rewriters WAIT for append holders
+    * rather than failing fast; an appender waits for anyone (a
+    * partition rewrite is minutes at worst, and its own data isn't
+    * visible until the renames anyway). Lock order is ascending by
+    * range — multi-range appenders can never deadlock each other. */
+  private def appendStaged(spark: SparkSession, b: Pinned, tablePath: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def underLocks[T](rs: Seq[Long])(body: => T): T =
@@ -253,22 +276,17 @@ object Logs {
         withPartitionLock(fs, tablePath, r, kind = "append",
           waitFor = Set("append", "rewrite"), waitMs = 600000L)(acc())
       }.apply()
-    underLocks(ranges.toIndexedSeq) {
+    underLocks(b.ranges) {
       // partition-scoped anti-join: list ONLY the incoming ranges'
       // dirs (no full-table partition discovery — at 10^5 partitions
       // the root listing dwarfed the batch) and probe just their rows;
       // the root is listed only when none of them exists yet
-      val existing = ranges.filter(r =>
-        fs.exists(new org.apache.hadoop.fs.Path(rangeDir(tablePath, r)))).toIndexedSeq
+      val existing = b.ranges.filter(r =>
+        fs.exists(new org.apache.hadoop.fs.Path(rangeDir(tablePath, r))))
       if (existing.isEmpty) requirePartitioned(tablePath, committedRanges(spark, tablePath))
-      val fresh = unseen(spark, incoming, tablePath, existing)
-      val writer = bloomWriter(fresh
-        .repartition(col("block_range"))
-        .sortWithinPartitions("address", "topic0"))
-        .partitionBy("block_range")
       val stageId = java.util.UUID.randomUUID().toString
       val stageDir = new org.apache.hadoop.fs.Path(s"$tablePath/_graft_stage/$stageId")
-      writer.mode("overwrite").parquet(stageDir.toString)
+      rangeWriter(unseen(spark, b, tablePath, existing)).mode("overwrite").parquet(stageDir.toString)
       try {
         fs.listStatus(stageDir).toSeq
           .filter(d => d.isDirectory && d.getPath.getName.startsWith("block_range="))
@@ -389,19 +407,8 @@ object Logs {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     import scala.concurrent.{Await, Future}
-    val jobs = targetRanges.map { r => Future {
-      val partDir = rangeDir(tablePath, r)
-      val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(partDir)).getLength
-      val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      swapInPartition(fs, tablePath, r) { tmp =>
-        bloomWriter(
-          open(spark, tablePath, partDir) // analytic columns; no block_range col
-            .dropDuplicates(pk)
-            .repartition(nFiles)
-            .sortWithinPartitions("address", "topic0"))
-          .mode("overwrite").parquet(tmp)
-      }
-    }}
+    val jobs = targetRanges.map(r =>
+      Future(rewriteRange(spark, fs, tablePath, r, targetFileBytes)(_.dropDuplicates(pk))))
     // wait for EVERY job before any cleanup — a parked partition must
     // never be deleted while its swap is still in flight
     val results = jobs.map(f =>
@@ -414,6 +421,21 @@ object Logs {
     // on failure: leave tmp/bak on disk — recovery evidence, and
     // possibly a parked partition whose restore itself failed
     results.collect { case scala.util.Failure(e) => throw e }
+  }
+
+  /** Swap-rewrite range `r` as `merge` of its stored rows (analytic
+    * columns, no `block_range`), opened under the partition lock, in
+    * sorted files of about `targetFileBytes` each. */
+  private def rewriteRange(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      tablePath: String, r: Long, targetFileBytes: Long = 512L << 20)(
+      merge: DataFrame => DataFrame): Unit = {
+    val partDir = rangeDir(tablePath, r)
+    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(partDir)).getLength
+    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    swapInPartition(fs, tablePath, r) { tmp =>
+      bloomWriter(merge(open(spark, tablePath, partDir)).repartition(nFiles)
+        .sortWithinPartitions("address", "topic0")).mode("overwrite").parquet(tmp)
+    }
   }
 
   /** Re-pin snapshots after an in-place rewrite: compaction and
@@ -595,41 +617,20 @@ object Logs {
     * shadowing later at-least-once replays of the original insert
     * (no resurrection), and [[canonical]] drops it at read time.
     * Cost is O(touched partitions) — stored ranges the batch does not
-    * overlap are never read or rewritten — so a micro-batch pays for
-    * its own block window, not the table. */
-  def appendCanonical(spark: SparkSession, batch: DataFrame, tablePath: String): Unit = {
-    val incoming = withBlockRange(latestPerPk(batch))
-    def writeFresh(rows: DataFrame): Unit = bloomWriter(rows
-        .repartition(col("block_range"))
-        .sortWithinPartitions("address", "topic0"))
-      .mode("append").partitionBy("block_range").parquet(tablePath)
-    val stored = committedRanges(spark, tablePath)
-    if (stored.isEmpty) {
-      if (!incoming.isEmpty) writeFresh(incoming)
-      return
+    * overlap are never read or rewritten, and the batch's per-PK window
+    * runs once ([[pinned]]) however many ranges it touches. */
+  def appendCanonical(spark: SparkSession, batch: DataFrame, tablePath: String): Unit =
+    pinned(withBlockRange(latestPerPk(batch))) { b =>
+      val stored = committedRanges(spark, tablePath)
+      requirePartitioned(tablePath, stored)
+      val (overlapping, fresh) = b.ranges.partition(stored.getOrElse(Nil).toSet)
+      if (fresh.nonEmpty)
+        rangeWriter(b.rows.filter(col("block_range").isin(fresh: _*))).mode("append").parquet(tablePath)
+      val fs = new org.apache.hadoop.fs.Path(tablePath)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      overlapping.foreach(r => rewriteRange(spark, fs, tablePath, r)(live => latestPerPk(
+        live.unionByName(b.rows.filter(col("block_range") === r).drop("block_range")))))
+      clearSwapDirs(fs, tablePath, overlapping)
+      if (overlapping.nonEmpty) recommitSnapshots(spark, tablePath)
     }
-    requirePartitioned(tablePath, stored)
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val touched = incoming.select("block_range").distinct().collect()
-      .map(_.getAs[Number](0).longValue())
-    val (overlapping, fresh) = touched.partition(stored.get.toSet)
-    if (fresh.nonEmpty)
-      writeFresh(incoming.filter(col("block_range").isin(fresh.toIndexedSeq: _*)))
-    overlapping.foreach { r =>
-      val partDir = rangeDir(tablePath, r)
-      val nFiles = math.max(1L, (fs.getContentSummary(new org.apache.hadoop.fs.Path(partDir))
-        .getLength + (512L << 20) - 1) / (512L << 20)).toInt
-      val merged = latestPerPk(
-        open(spark, tablePath, partDir)
-          .unionByName(incoming.filter(col("block_range") === r).drop("block_range")))
-      swapInPartition(fs, tablePath, r) { tmp =>
-        bloomWriter(merged.repartition(nFiles)
-            .sortWithinPartitions("address", "topic0"))
-          .mode("overwrite").parquet(tmp)
-      }
-    }
-    clearSwapDirs(fs, tablePath, overlapping)
-    if (overlapping.nonEmpty) recommitSnapshots(spark, tablePath)
-  }
 }

@@ -69,17 +69,15 @@ object Price {
     else spark.read.schema(schema).parquet(tablePath)
 
   /** S6: idempotent append, PK DO-NOTHING semantics
-    * (`get_price.go:96`). Dimension-sized table — plain anti-join. */
-  def appendIdempotent(spark: SparkSession, batch: DataFrame, tablePath: String): Unit = {
-    val deduped = batch.select(schema.fieldNames.map(col): _*).dropDuplicates(pk)
-    // the committed-data guard of Logs.appendIdempotent: a dir holding
-    // only _temporary/_SUCCESS (a crashed first write) is an empty
-    // table, and an empty batch never creates the table
-    val exists = Logs.hasCommittedData(spark, tablePath)
-    if (!exists && deduped.isEmpty) return
-    val fresh =
-      if (exists) deduped.join(read(spark, tablePath).select(pk.map(col): _*), pk, "left_anti")
-      else deduped
-    fresh.write.mode("append").parquet(tablePath)
-  }
+    * (`get_price.go:96`), on the append path of `Logs.appendIdempotent`:
+    * the batch is evaluated once, the probe reads only its block window
+    * (the PK carries `block_number`), and an empty batch writes nothing
+    * — so a dir holding only `_temporary`/`_SUCCESS` (a crashed first
+    * write) stays an empty table until real rows land. */
+  def appendIdempotent(spark: SparkSession, batch: DataFrame, tablePath: String): Unit =
+    Logs.pinned(batch.select(schema.fieldNames.map(col): _*).dropDuplicates(pk)) { b =>
+      if (b.n > 0)
+        (if (Logs.hasCommittedData(spark, tablePath)) b.unseen(read(spark, tablePath), pk)
+          else b.rows).write.mode("append").parquet(tablePath)
+    }
 }

@@ -27,24 +27,22 @@ object StreamLogs {
       else LogStream.ingest(spark, in, table, ckpt, pollInterval = poll)
     println(s"[stream] mode=${poll.map(p => s"tail-follow/$p").getOrElse("catch-up")} " +
       s"table=$table checkpoint=$ckpt")
-    def stats(): (Long, Long) =
-      if (table.startsWith("jdbc:")) {
-        val t = spark.read.jdbc(table, "logs", new java.util.Properties())
-        (t.count(), t.agg(org.apache.spark.sql.functions.coalesce(
-          org.apache.spark.sql.functions.max("block_number"),
-          org.apache.spark.sql.functions.lit(0L))).collect()(0).getLong(0))
-      } else (Logs.read(spark, table).count(), Logs.highWaterMark(spark, table))
     poll match {
       case Some(_) =>
         // tail-follow: report progress until externally stopped
         while (q.isActive) {
           Thread.sleep(5000)
-          val (n, hwm) = stats()
-          println(s"[stream] rows=$n hwm=$hwm")
+          graft.streaming.progressLine(q).foreach(l => println(s"[stream] $l"))
         }
       case None =>
         q.awaitTermination()
-        val (n, hwm) = stats()
+        val (n, hwm) =
+          if (table.startsWith("jdbc:")) {
+            val t = spark.read.jdbc(table, "logs", new java.util.Properties())
+            (t.count(), t.agg(org.apache.spark.sql.functions.coalesce(
+              org.apache.spark.sql.functions.max("block_number"),
+              org.apache.spark.sql.functions.lit(0L))).collect()(0).getLong(0))
+          } else (Logs.read(spark, table).count(), Logs.highWaterMark(spark, table))
         println(s"[stream] caught up: rows=$n hwm=$hwm")
     }
     spark.stop()

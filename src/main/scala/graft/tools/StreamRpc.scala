@@ -41,8 +41,7 @@ object StreamRpc {
       case Some(_) =>
         while (q.isActive) {
           Thread.sleep(5000)
-          println(s"[streamrpc] rows=${Logs.read(spark, table).count()} " +
-            s"hwm=${Logs.highWaterMark(spark, table)}")
+          graft.streaming.progressLine(q).foreach(l => println(s"[streamrpc] $l"))
         }
       case None =>
         q.awaitTermination()

@@ -153,6 +153,24 @@ class LangIdSpec extends SparkSpec {
     assert(e.getMessage.contains("refusing to serve"))
   }
 
+  test("a model with a weight qdw <= 0 is refused by load and by classifyQuantized") {
+    val docs = Seq((1L, "der Hund und die Katze spielen im Garten")).toDF("id", "text")
+    val langTable = quantized.langs.toDF("lang", "q_prior", "q_floor")
+    val (lang, bucket, _) = quantized.weights.head
+    Seq(0L, -3L).foreach { qdw =>
+      val bad = quantized.copy(weights = (lang, bucket, qdw) +: quantized.weights.tail)
+      val dir = java.nio.file.Files.createTempDirectory("langid_bad").toString + "/m"
+      LangId.save(spark, bad, dir)
+      val e = intercept[IllegalArgumentException](LangId.load(spark, dir))
+      assert(e.getMessage.contains("qdw <= 0"), e.getMessage)
+      val thrown = intercept[Exception](LangId.classifyQuantized(docs, "id", "text",
+        langTable, bad.weights.toDF("lang", "bucket", "qdw"), bad.dim, bad.ns, bad.family)
+        .collect())
+      assert(Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("qdw <= 0")), thrown)
+    }
+  }
+
   test("zero evidence yields und; empty and whitespace-only text never crash") {
     val docs = Seq((1L, ""), (2L, "   \t  \n "), (3L, "the weather is nice"))
       .toDF("id", "text")

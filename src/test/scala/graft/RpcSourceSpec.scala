@@ -148,6 +148,41 @@ class RpcSourceSpec extends SparkSpec {
     } finally s.stop()
   }
 
+  test("a drain into appendIdempotent requests each window once and lands numInputRows") {
+    // step=5 → 12 windows over 60 blocks, in two admission-capped batches
+    val s = newServer(60)
+    try {
+      val table = java.nio.file.Files.createTempDirectory("rpcsrc_once").toString + "/t"
+      val ckpt = java.nio.file.Files.createTempDirectory("rpcsrc_once_ckpt").toString
+      val q = spark.readStream.format(RpcSource.Format)
+        .option("endpoint", s.endpoint)
+        .option("fromBlock", "1").option("blockStep", "5")
+        .option("toBlock", "1000000")
+        .load()
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          Logs.appendIdempotent(b.sparkSession, b, table)
+        }
+        .start()
+      q.awaitTermination()
+      assert(Logs.read(spark, table).count() === 60)
+      val windows = s.requests.filter(_.contains("eth_getLogs"))
+      assert(windows.length === 12, windows)
+      assert(windows.distinct.length === 12, windows)
+      val progress = q.recentProgress.filter(_.numInputRows > 0)
+      assert(progress.map(_.numInputRows).sum === 60L)
+      progress.foreach { p =>
+        val src = p.sources.head
+        val (from, to) = (Option(src.startOffset).fold(0L)(_.trim.toLong), src.endOffset.trim.toLong)
+        val landed = Logs.read(spark, table)
+          .filter(col("block_number") > from && col("block_number") <= to).count()
+        assert(p.numInputRows === landed, s"batch ${p.batchId} ($from, $to]")
+      }
+    } finally s.stop()
+  }
+
   test("backfilltimestamps option fills block_timestamp executor-side") {
     val s = newServer(20)
     try {
