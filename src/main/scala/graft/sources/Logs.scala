@@ -102,7 +102,9 @@ object Logs {
     col("transactionHash").as("transaction_hash"),
     Abi.hexToLong(col("transactionIndex")).as("transaction_index"),
     Abi.hexToLong(col("logIndex")).as("log_index"),
-    col("removed"),
+    // absent = not removed, as RpcSource reads it (`when`, not
+    // `coalesce`: the column stays nullable, as in [[schema]])
+    when(col("removed").isNull, lit(false)).otherwise(col("removed")).as("removed"),
     lit(null).cast(TimestampType).as("block_timestamp"))
 
   /** Batch replay of an NDJSON RPC capture (fixture format per
@@ -148,10 +150,11 @@ object Logs {
   private def rangeDir(tablePath: String, r: Long): String = s"$tablePath/block_range=$r"
 
   /** One append's input after [[pinned]]: `n` rows read from the pin,
-    * `block_number` window `[lo, hi]`, sorted `block_range` values
-    * `ranges` (empty without that column, as for a `price` batch). */
-  private[sources] final case class Pinned(rows: DataFrame, n: Long, lo: Long, hi: Long,
-      ranges: Seq[Long]) {
+    * `nullBlocks` of them without a `block_number`, `block_number`
+    * window `[lo, hi]`, sorted `block_range` values `ranges` (empty
+    * without that column, as for a `price` batch). */
+  private[sources] final case class Pinned(rows: DataFrame, n: Long, nullBlocks: Long,
+      lo: Long, hi: Long, ranges: Seq[Long]) {
     /** The DO-NOTHING probe: rows whose `key` is not in `stored`, read
       * only inside `[lo, hi]`. Exact because the key fixes the block (a
       * logs PK's `block_hash` names one block; a price PK holds
@@ -168,17 +171,28 @@ object Logs {
     * re-running the upstream (RPC fetch, JSON parse, dedup shuffle). The
     * pin is released when `body` returns or throws. */
   private[sources] def pinned[T](batch: DataFrame)(body: Pinned => T): T = {
-    val facts = Seq(count(lit(1)), coalesce(min("block_number"), lit(0L)),
-      coalesce(max("block_number"), lit(-1L))) ++
+    val facts = Seq(count(lit(1)), count("block_number"),
+      coalesce(min("block_number"), lit(0L)), coalesce(max("block_number"), lit(-1L))) ++
       (if (batch.columns.contains("block_range")) Seq(collect_set("block_range")) else Nil)
     val observed = batch.observe("graft_append_facts", facts.head, facts.tail: _*)
     val rows = observed.localCheckpoint(eager = true)
     try {
       val f = observed.queryExecution.observedMetrics("graft_append_facts")
-      body(Pinned(rows, f.getLong(0), f.getLong(1), f.getLong(2),
-        if (f.length > 3) f.getSeq[Long](3).sorted else Nil))
+      body(Pinned(rows, f.getLong(0), f.getLong(0) - f.getLong(1), f.getLong(2), f.getLong(3),
+        if (f.length > 4) f.getSeq[Long](4).sorted else Nil))
     } finally graft.Pins.release(rows)
   }
+
+  /** [[pinned]] for a logs batch, tagged with its `block_range`. A row
+    * without a `block_number` (a pending log) is refused before any
+    * write: it would land in `block_range=__HIVE_DEFAULT_PARTITION__`,
+    * which no later read or append of the table can parse. */
+  private def pinnedLogs[T](batch: DataFrame)(body: Pinned => T): T =
+    pinned(withBlockRange(batch)) { b =>
+      require(b.nullBlocks == 0, s"logs batch has ${b.nullBlocks} row(s) with a null " +
+        "block_number (pending logs); nothing was written")
+      body(b)
+    }
 
   /** [[Pinned.unseen]] against the stored `ranges` of the logs table;
     * no probe at all when the batch touches no stored range. */
@@ -244,7 +258,7 @@ object Logs {
   def appendIdempotent(spark: SparkSession, batch: DataFrame, tablePath: String,
       canonicalize: Boolean = false, staged: Boolean = false): Unit =
     if (canonicalize) appendCanonical(spark, batch, tablePath)
-    else pinned(withBlockRange(batch.dropDuplicates(pk))) { b =>
+    else pinnedLogs(batch.dropDuplicates(pk)) { b =>
       if (b.n > 0 && staged) appendStaged(spark, b, tablePath)
       else if (b.n > 0) {
         val stored = committedRanges(spark, tablePath)
@@ -620,7 +634,7 @@ object Logs {
     * overlap are never read or rewritten, and the batch's per-PK window
     * runs once ([[pinned]]) however many ranges it touches. */
   def appendCanonical(spark: SparkSession, batch: DataFrame, tablePath: String): Unit =
-    pinned(withBlockRange(latestPerPk(batch))) { b =>
+    pinnedLogs(latestPerPk(batch)) { b =>
       val stored = committedRanges(spark, tablePath)
       requirePartitioned(tablePath, stored)
       val (overlapping, fresh) = b.ranges.partition(stored.getOrElse(Nil).toSet)

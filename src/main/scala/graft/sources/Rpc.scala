@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
@@ -23,12 +22,12 @@ import java.time.Duration
   *   window without aborting (`main.go:141-146`);
   * - any other RPC error → fatal.
   *
-  * The RPC exchange happens on the driver (windows are small by
-  * design — the node is the bottleneck, `README.md:100-103`); Spark
-  * parses/transforms/appends, so the analytic side scales exactly
-  * like batch replay. Envelope parsing is a driver-side Jackson parse
-  * (Jackson ships with Spark) — a Spark job per RPC call would cost
-  * more scheduler time than the parse itself.
+  * Every JSON-RPC call goes through [[exchange]]. The head probe and the
+  * `eth_call` price probes run on the driver (one small call each, a
+  * Spark job per call would cost more scheduler time than the call);
+  * each `eth_getLogs` window is a one-partition [[RpcSource]] batch
+  * read, so the loop and the streaming source share one fetch and one
+  * wire→row transform.
   */
 object Rpc {
 
@@ -65,8 +64,7 @@ object Rpc {
         * `evt_block_time` in every view (`init.sql:213-222`) but its
         * loader never populates it (`get_logs.go:118-119`) — any
         * time-series grouping gets nulls. One probe per DISTINCT
-        * block present in the window's batch (bounded by blockStep),
-        * joined on before the append. */
+        * block of each window, issued by the window's reader. */
       backfillTimestamps: Boolean = false)
 
   private lazy val http = HttpClient.newBuilder()
@@ -78,9 +76,6 @@ object Rpc {
         .header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
-
-  private def quote(ss: Seq[String]): String =
-    ss.map(s => "\"" + s + "\"").mkString("[", ",", "]")
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -99,17 +94,17 @@ object Rpc {
   private val MaxClientErrorRetries = 50
 
   /** One RPC call with the reference's retry semantics; returns the
-    * raw response body, or None when the window should be skipped.
-    * Every retry is logged (the reference logs its loop errors too). */
-  private[sources] def call(endpoint: String, body: String, retryMillis: Long,
-      sleeper: Long => Unit): Option[String] = {
+    * raw response body of the first HTTP 200. Every retry is logged
+    * (the reference logs its loop errors too). */
+  private def call(endpoint: String, body: String, retryMillis: Long,
+      sleeper: Long => Unit): String = {
     var oddStatusRetries = 0
     while (true) {
       val resp =
         try Some(post(endpoint, body))
         catch { case _: java.io.IOException => None } // transport error
       resp match {
-        case Some(r) if r.statusCode() == 200 => return Some(r.body())
+        case Some(r) if r.statusCode() == 200 => return r.body()
         case Some(r) if Set(429, 503, 504)(r.statusCode()) =>
           log.warn(s"rpc: HTTP ${r.statusCode()} from $endpoint, backing off ${retryMillis}ms")
           sleeper(retryMillis)
@@ -132,46 +127,41 @@ object Rpc {
           sleeper(retryMillis)
       }
     }
-    None // unreachable
+    throw new IllegalStateException("unreachable")
   }
 
-  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** Thread-safe once configured; shared by every exchange on a JVM. */
+  private val mapper = new ObjectMapper()
 
-  /** Parse the JSON-RPC envelope on the driver (plain Jackson — a
-    * 1-row Spark job per RPC call costs 10-100 ms of scheduler
-    * overhead per window, pure waste on the live path). `result`
-    * comes back as the unquoted string for scalars and as raw JSON
-    * text for arrays (second-stage `from_json` parses those in the
-    * actual Spark plan). */
-  private def envelope(body: String): (Option[String], Option[(Long, String)]) =
-    try {
-      val root = mapper.readTree(body)
-      val err = Option(root.get("error")).filterNot(_.isNull).map { e =>
-        (Option(e.get("code")).map(_.asLong).getOrElse(0L),
-          Option(e.get("message")).map(_.asText).getOrElse(""))
-      }
-      val res = Option(root.get("result")).filterNot(_.isNull)
-        .map(r => if (r.isTextual) r.asText else r.toString)
-      (res, err)
-    } catch {
-      case _: com.fasterxml.jackson.core.JacksonException => (None, None)
-    }
-
-  /** S2 head probe, session-free form (envelope parse is driver-side
-    * Jackson — no Spark needed). */
-  def blockNumber(endpoint: String, retryMillis: Long): Long =
-    blockNumber(null, endpoint, retryMillis)
-
-  /** S2: `eth_blockNumber` head probe (`get_block_number.go:3-27`). */
-  def blockNumber(spark: SparkSession, endpoint: String,
-      retryMillis: Long = 10000, sleeper: Long => Unit = Thread.sleep): Long = {
+  /** THE JSON-RPC exchange: `method(params)` posted with [[call]]'s
+    * retry rules, the reply parsed once. Returns the `result` node;
+    * None when the node refused the call with -32602 (skip it,
+    * `main.go:141-146`) or answered a null result. Any other RPC error,
+    * or a reply that is not JSON, throws naming the method. */
+  private[sources] def exchange(endpoint: String, method: String, params: String,
+      retryMillis: Long, sleeper: Long => Unit = Thread.sleep): Option[JsonNode] = {
     val body = call(endpoint,
-      """{"jsonrpc":"2.0","id":1,"method":"eth_blockNumber","params":[]}""",
-      retryMillis, sleeper).get
-    val (result, err) = envelope(body)
-    err.foreach { case (c, m) => throw new RuntimeException(s"eth_blockNumber error $c: $m") }
-    java.lang.Long.parseLong(result.get.stripPrefix("0x"), 16)
+      s"""{"jsonrpc":"2.0","id":1,"method":"$method","params":$params}""", retryMillis, sleeper)
+    val root =
+      try mapper.readTree(body)
+      catch { case e: com.fasterxml.jackson.core.JacksonException =>
+        throw new RuntimeException(s"$method: unparseable reply from $endpoint", e) }
+    val err = root.get("error")
+    if (err == null || err.isNull) Option(root.get("result")).filterNot(_.isNull)
+    else if (err.path("code").asLong == -32602) None
+    else throw new RuntimeException(s"$method error: $err")
   }
+
+  /** A `0x`-hex quantity as on the wire. */
+  private[sources] def hexLong(n: JsonNode): Long =
+    java.lang.Long.parseLong(n.asText.stripPrefix("0x"), 16)
+
+  /** S2: `eth_blockNumber` head probe (`get_block_number.go:3-27`); a
+    * refused or null head fails loudly. */
+  def blockNumber(endpoint: String, retryMillis: Long = 10000,
+      sleeper: Long => Unit = Thread.sleep): Long =
+    hexLong(exchange(endpoint, "eth_blockNumber", "[]", retryMillis, sleeper).getOrElse(
+      throw new RuntimeException(s"eth_blockNumber: no head from $endpoint")))
 
   /** Chainlink `latestAnswer()` function selector (`get_price.go:46`,
     * `curl-call-chainlink-price.sh:5`). */
@@ -179,20 +169,12 @@ object Rpc {
 
   /** S3: one live `eth_call` price probe (`get_price.go:31-50`):
     * `latestAnswer()` on `oracle` as of `block`. Returns the raw
-    * ABI-word result, or None when the node refused the call (-32602
-    * window-skip semantics, same as getLogs). */
-  def ethCallPrice(spark: SparkSession, cfg: Config, oracle: String, block: Long,
-      sleeper: Long => Unit = Thread.sleep): Option[String] = {
-    val req =
-      s"""{"jsonrpc":"2.0","id":1,"method":"eth_call","params":[{"to":"$oracle","data":"$PriceSelector"},"0x${block.toHexString}"]}"""
-    val body = call(cfg.endpoint, req, cfg.retryMillis, sleeper).get
-    val (result, err) = envelope(body)
-    err match {
-      case Some((-32602, _)) => None
-      case Some((c, m)) => throw new RuntimeException(s"eth_call error $c: $m")
-      case None => result
-    }
-  }
+    * ABI-word result, or None when the node refused the call. */
+  def ethCallPrice(cfg: Config, oracle: String, block: Long,
+      sleeper: Long => Unit = Thread.sleep): Option[String] =
+    exchange(cfg.endpoint, "eth_call",
+      s"""[{"to":"$oracle","data":"$PriceSelector"},"0x${block.toHexString}"]""",
+      cfg.retryMillis, sleeper).map(_.asText)
 
   /** E1: the per-window price sweep (`getPrices`, `main.go:191-198`):
     * one probe per (token, oracle) pair as of the window's fromBlock,
@@ -206,7 +188,7 @@ object Rpc {
     require(cfg.tokens.length == cfg.oracles.length,
       s"tokens (${cfg.tokens.length}) and oracles (${cfg.oracles.length}) must pair up (main.go:39-48)")
     val rows = cfg.tokens.zip(cfg.oracles).flatMap { case (token, oracle) =>
-      ethCallPrice(spark, cfg, oracle, fromBlock, sleeper)
+      ethCallPrice(cfg, oracle, fromBlock, sleeper)
         .filter(_.length == 66)
         .map(r => (token, "0x" + fromBlock.toHexString, r))
     }
@@ -223,62 +205,17 @@ object Rpc {
     * leave `block_timestamp` null for those rows, the reference's
     * permanent state for ALL rows (`get_logs.go:118-119`). */
   def getBlockTimestamp(endpoint: String, block: Long, retryMillis: Long = 10000,
-      sleeper: Long => Unit = Thread.sleep): Option[Long] = {
-    val req =
-      s"""{"jsonrpc":"2.0","id":1,"method":"eth_getBlockByNumber","params":["0x${block.toHexString}",false]}"""
-    val body = call(endpoint, req, retryMillis, sleeper).get
-    val (result, err) = envelope(body)
-    err match {
-      case Some((-32602, _)) => None
-      case Some((c, m)) => throw new RuntimeException(s"eth_getBlockByNumber error $c: $m")
-      case None => result.flatMap { json =>
-        val node = mapper.readTree(json)
-        Option(node.get("timestamp")).filterNot(_.isNull)
-          .map(t => java.lang.Long.parseLong(t.asText.stripPrefix("0x"), 16))
-      }
-    }
-  }
+      sleeper: Long => Unit = Thread.sleep): Option[Long] =
+    exchange(endpoint, "eth_getBlockByNumber", s"""["0x${block.toHexString}",false]""",
+      retryMillis, sleeper)
+      .flatMap(h => Option(h.get("timestamp")).filterNot(_.isNull)).map(hexLong)
 
-  /** The per-window backfill: probe each DISTINCT block the batch
-    * touches (≤ blockStep probes — the collect is bounded by the
-    * window, not the table) and join the timestamps on. Blocks whose
-    * probe returns None keep a null timestamp. */
-  private def backfillWindow(spark: SparkSession, cfg: Config, batch: DataFrame,
-      sleeper: Long => Unit): DataFrame = {
-    import spark.implicits._
-    val present = batch.select("block_number").distinct().collect().map(_.getLong(0))
-    val headers = present.toSeq.flatMap(b =>
-      getBlockTimestamp(cfg.endpoint, b, cfg.retryMillis, sleeper).map(ts => (b, ts)))
-    val blocks = headers.toDF("block_number", "_epoch")
-      .select(col("block_number"), timestamp_seconds(col("_epoch")).as("block_timestamp"))
-    Logs.withBlockTimestamps(batch, blocks)
-  }
-
-  /** S1: one `eth_getLogs` window as an analytic DataFrame; None = the
-    * node refused the window (-32602) and it should be skipped. */
-  def getLogs(spark: SparkSession, cfg: Config, from: Long, to: Long,
-      sleeper: Long => Unit = Thread.sleep): Option[DataFrame] = {
-    val addrFilter =
-      if (cfg.contracts.nonEmpty) s""""address":${quote(cfg.contracts)},""" else ""
-    val req =
-      s"""{"jsonrpc":"2.0","id":1,"method":"eth_getLogs","params":[{$addrFilter"fromBlock":"0x${from.toHexString}","toBlock":"0x${to.toHexString}"}]}"""
-    val body = call(cfg.endpoint, req, cfg.retryMillis, sleeper).get
-    val (result, err) = envelope(body)
-    err match {
-      case Some((-32602, _)) => None // skip window (main.go:141-146)
-      case Some((c, m)) => throw new RuntimeException(s"eth_getLogs error $c: $m")
-      case None =>
-        import spark.implicits._
-        val wire = Seq(result.getOrElse("[]")).toDF("j")
-          .select(explode(from_json(col("j"), ArrayType(Logs.wireSchema))).as("r"))
-          .select(col("r.*"))
-        Some(Logs.fromWire(wire))
-    }
-  }
-
-  /** E1: the bounded-or-infinite poll loop. Returns the last ingested
-    * block. `maxIterations` guards tests; production tail-follow runs
-    * with `toBlock=None` until stopped. */
+  /** E1: the bounded-or-infinite poll loop. Each window `[from, to]` is
+    * one [[RpcSource]] batch read (one partition) into
+    * [[Logs.appendIdempotent]]; a refused window reads empty and the
+    * loop advances anyway, as the reference does. Returns the last
+    * ingested block. `maxIterations` guards tests; production
+    * tail-follow runs with `toBlock=None` until stopped. */
   def ingestLoop(
       spark: SparkSession,
       cfg: Config,
@@ -292,20 +229,18 @@ object Rpc {
     var last = from - 1
     while (from <= target && iter < maxIterations) {
       iter += 1
-      val head = blockNumber(spark, cfg.endpoint, cfg.retryMillis, sleeper)
+      val head = blockNumber(cfg.endpoint, cfg.retryMillis, sleeper)
       if (from > math.min(head, target)) {
         if (from > target) return last
         sleeper(cfg.sleepMillis) // caught up to head: back off (T2, main.go:221-226)
       } else {
         val to = math.min(math.min(from + cfg.blockStep - 1, head), target)
-        getLogs(spark, cfg, from, to, sleeper) match {
-          case Some(batch) =>
-            val enriched =
-              if (cfg.backfillTimestamps) backfillWindow(spark, cfg, batch, sleeper)
-              else batch
-            Logs.appendIdempotent(spark, enriched, tablePath, cfg.canonicalTombstones)
-          case None => // window refused; advance anyway, as the reference does
-        }
+        val window = spark.read.format(RpcSource.Format)
+          .option("endpoint", cfg.endpoint).option("fromBlock", from).option("toBlock", to)
+          .option("blockStep", to - from + 1).option("contracts", cfg.contracts.mkString(","))
+          .option("retryMillis", cfg.retryMillis)
+          .option("backfillTimestamps", cfg.backfillTimestamps).load()
+        Logs.appendIdempotent(spark, window, tablePath, cfg.canonicalTombstones)
         // price sweep after the logs window, as of fromBlock — the
         // reference's loop order (`main.go:235-237`)
         if (cfg.tokens.nonEmpty)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -12,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 for live `eth_getLogs` ingestion — the reference's E1
-  * extract loop (`main.go:200-242`) as a genuine Spark source:
+  * extract loop (`main.go:200-242`) as a genuine Spark source, and the
+  * ONE place `eth_getLogs` is fetched and transformed:
   *
   * {{{
   * spark.read.format("graft.sources.RpcSource")
@@ -21,10 +22,13 @@ import scala.jdk.CollectionConverters._
   *   .filter($"address" === "0x..." && $"block_number" > 1000)
   * }}}
   *
-  * Scale shape this buys over the driver loop ([[Rpc.ingestLoop]]):
+  * - **batch and streaming**: a batch read covers `[fromBlock,
+  *   toBlock]` (toBlock absent = the head at planning);
+  *   `spark.readStream` follows the head per trigger with checkpointed
+  *   block offsets ([[RpcMicroBatchStream]]); [[Rpc.ingestLoop]] reads
+  *   each of its windows as a one-partition batch read;
   * - **one InputPartition per block window** — executors pull windows
-  *   in parallel (the driver loop serializes on one HTTP client; a
-  *   1000-executor backfill wants 1000 concurrent windows);
+  *   in parallel;
   * - **source-side predicate pushdown**: `address` equality/IN filters
   *   travel INTO the JSON-RPC request (`get_logs.go:69-79` semantics),
   *   and `block_number` range filters PRUNE whole windows before any
@@ -33,9 +37,10 @@ import scala.jdk.CollectionConverters._
   *   casts, `get_logs.go:38-55`) happens in the partition reader, so
   *   downstream plans see the same schema as the stored table.
   *
-  * The reference's retry state machine ([[Rpc.call]]) runs per window
-  * inside each reader. Bounded-batch source; the unbounded tail-follow
-  * path stays [[Rpc.ingestLoop]]/Structured Streaming.
+  * Options: `endpoint` (required), `fromBlock`, `toBlock`, `blockStep`,
+  * `contracts` (comma-separated), `retryMillis`, `backfillTimestamps`.
+  * The reference's retry state machine runs per window inside each
+  * reader ([[Rpc.exchange]]).
   */
 class RpcSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = Logs.schema
@@ -173,7 +178,13 @@ object RpcSource {
       extends streaming.MicroBatchStream with streaming.SupportsAdmissionControl
       with streaming.SupportsTriggerAvailableNow {
     @volatile private var drainTarget: Option[Long] = None
-    private def liveHead(): Long = math.min(Rpc.blockNumber(endpoint, retryMillis), to)
+    /** The head the last probe saw, capped at `to`; reported as the
+      * source's latest offset without a second probe. */
+    @volatile private var lastHead: Long = from - 1
+    private def liveHead(): Long = {
+      lastHead = math.min(Rpc.blockNumber(endpoint, retryMillis), to)
+      lastHead
+    }
     override def prepareForTriggerAvailableNow(): Unit =
       drainTarget = Some(liveHead())
     override def getDefaultReadLimit: streaming.ReadLimit =
@@ -193,8 +204,7 @@ object RpcSource {
       }
       BlockOffset(math.max(lo, capped))
     }
-    override def reportLatestOffset(): streaming.Offset =
-      BlockOffset(math.min(Rpc.blockNumber(endpoint, retryMillis), to))
+    override def reportLatestOffset(): streaming.Offset = BlockOffset(lastHead)
     override def deserializeOffset(json: String): streaming.Offset =
       BlockOffset(json.toLong)
     override def planInputPartitions(start: streaming.Offset,
@@ -218,68 +228,50 @@ object RpcSource {
   }
 
   /** Executor-side reader: one `eth_getLogs` request for the window,
-    * wire→analytic transform inline (`get_logs.go:38-55`). A refused
-    * window (-32602) yields zero rows, the reference's skip semantics. */
+    * wire→analytic transform inline (`get_logs.go:38-55`), the result
+    * node iterated as parsed. A refused window (-32602) yields zero
+    * rows, the reference's skip semantics. */
   private[sources] class RpcWindowReader(endpoint: String, addresses: Seq[String],
       retryMillis: Long, from: Long, to: Long,
       backfillTs: Boolean = false) extends PartitionReader[InternalRow] {
-    private val mapper = new ObjectMapper()
     private lazy val logs: Iterator[InternalRow] = {
       val addrFilter =
         if (addresses.nonEmpty)
           "\"address\":" + addresses.map("\"" + _ + "\"").mkString("[", ",", "]") + ","
         else ""
-      val req = s"""{"jsonrpc":"2.0","id":1,"method":"eth_getLogs","params":[{$addrFilter"fromBlock":"0x${from.toHexString}","toBlock":"0x${to.toHexString}"}]}"""
-      val body = Rpc.call(endpoint, req, retryMillis, Thread.sleep).get
-      val root = mapper.readTree(body)
-      val err = root.get("error")
-      if (err != null && !err.isNull) {
-        if (err.get("code").asLong == -32602) Iterator.empty // skip window
-        else throw new RuntimeException(s"eth_getLogs error: $err")
-      } else {
-        val result = root.get("result")
-        if (result == null || result.isNull) Iterator.empty
-        else {
-          val entries = result.elements().asScala.toSeq
-          def hexLongOf(log: com.fasterxml.jackson.databind.JsonNode, f: String): Long = {
-            val n = log.get(f)
-            if (n == null || n.isNull) 0L
-            else java.lang.Long.parseLong(n.asText.stripPrefix("0x"), 16)
-          }
-          // backfill extension (get_logs.go:118-119 leaves the column
-          // forever null): one header probe per DISTINCT block in THIS
-          // window, executed executor-side — a 1000-executor backfill
-          // spreads the probes exactly like the log pulls themselves
-          val tsMicros: Map[Long, Long] =
-            if (!backfillTs) Map.empty
-            else entries.map(hexLongOf(_, "blockNumber")).distinct.flatMap(b =>
-              Rpc.getBlockTimestamp(endpoint, b, retryMillis)
-                .map(sec => b -> sec * 1000000L)).toMap
-          entries.iterator.map { log =>
-            def s(f: String): UTF8String = {
-              val n = log.get(f)
-              if (n == null || n.isNull) null else UTF8String.fromString(n.asText)
-            }
-            def hexLong(f: String): Long = hexLongOf(log, f)
-            val topics = log.get("topics")
-            def topic(i: Int): UTF8String =
-              if (topics != null && topics.size > i) UTF8String.fromString(topics.get(i).asText)
-              else null
-            val dataRaw = log.get("data")
-            val data =
-              if (dataRaw == null || dataRaw.isNull) null
-              else if (dataRaw.asText == "0x" || dataRaw.asText.isEmpty) null // get_logs.go:44-46
-              else UTF8String.fromString(dataRaw.asText)
-            InternalRow(
-              s("address"), topic(0), topic(1), topic(2), topic(3), data,
-              s("blockHash"), hexLong("blockNumber"), s("transactionHash"),
-              hexLong("transactionIndex"), hexLong("logIndex"),
-              log.get("removed") != null && log.get("removed").asBoolean(false),
-              // TimestampType internal value = epoch micros; stays null
-              // unless the backfill option is on (reference parity)
-              tsMicros.get(hexLong("blockNumber")).map(Long.box).orNull)
-          }
-        }
+      val entries = Rpc.exchange(endpoint, "eth_getLogs",
+        s"""[{$addrFilter"fromBlock":"0x${from.toHexString}","toBlock":"0x${to.toHexString}"}]""",
+        retryMillis).fold(Seq.empty[JsonNode])(_.elements().asScala.toSeq)
+      def hexLongOf(log: JsonNode, f: String): Long = {
+        val n = log.get(f)
+        if (n == null || n.isNull) 0L else Rpc.hexLong(n)
+      }
+      // backfill extension (get_logs.go:118-119 leaves the column
+      // forever null): one header probe per DISTINCT block in THIS
+      // window, executed executor-side — a 1000-executor backfill
+      // spreads the probes exactly like the log pulls themselves
+      val tsMicros: Map[Long, Long] =
+        if (!backfillTs) Map.empty
+        else entries.map(hexLongOf(_, "blockNumber")).distinct.flatMap(b =>
+          Rpc.getBlockTimestamp(endpoint, b, retryMillis)
+            .map(sec => b -> sec * 1000000L)).toMap
+      entries.iterator.map { log =>
+        def s(f: String): UTF8String = UTF8String.fromString(log.path(f).asText(null))
+        def hexLong(f: String): Long = hexLongOf(log, f)
+        val topics = log.get("topics")
+        def topic(i: Int): UTF8String =
+          if (topics != null && topics.size > i) UTF8String.fromString(topics.get(i).asText)
+          else null
+        val data = log.path("data").asText("")
+        InternalRow(
+          s("address"), topic(0), topic(1), topic(2), topic(3),
+          if (data.isEmpty || data == "0x") null else UTF8String.fromString(data), // get_logs.go:44-46
+          s("blockHash"), hexLong("blockNumber"), s("transactionHash"),
+          hexLong("transactionIndex"), hexLong("logIndex"),
+          log.path("removed").asBoolean(false),
+          // TimestampType internal value = epoch micros; stays null
+          // unless the backfill option is on (reference parity)
+          tsMicros.get(hexLong("blockNumber")).map(Long.box).orNull)
       }
     }
     private var current: InternalRow = _

@@ -24,18 +24,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * - T5 bounded vs infinite: `Trigger.AvailableNow` ↔ `TO_BLOCK` set,
   *   `ProcessingTime` ↔ unset (`main.go:60-68`).
   *
-  * A live `eth_getLogs` source would slot in as a DataSourceV2 with
-  * address/block-range pushdown (SURVEY §4); file replay exercises the
-  * identical downstream plan.
+  * The live `eth_getLogs` source is the DataSourceV2
+  * [[graft.sources.RpcSource]] with address/block-range pushdown
+  * (`tools.StreamRpc`); file replay here feeds the identical downstream
+  * plan.
   */
 object LogStream {
 
-  /** Stream NDJSON RPC captures from `inputDir` into the logs table.
-    *
-    * @param maxFilesPerTrigger blockStep analog: bound work per batch
-    * @param pollInterval       None → bounded catch-up (AvailableNow);
-    *                           Some(d) → tail-follow with that trigger
-    */
   /** The transformed wire stream: NDJSON captures → analytic rows. */
   def wireStream(
       spark: SparkSession,
@@ -47,7 +42,12 @@ object LogStream {
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
         .json(inputDir))
 
-  /** @param canonicalize honor same-PK `removed=true` tombstones by
+  /** Stream NDJSON RPC captures from `inputDir` into the logs table.
+    *
+    * @param maxFilesPerTrigger blockStep analog: bound work per batch
+    * @param pollInterval       None → bounded catch-up (AvailableNow);
+    *                           Some(d) → tail-follow with that trigger
+    * @param canonicalize honor same-PK `removed=true` tombstones by
     *                      swap-rewriting the touched partitions
     *                      ([[Logs.appendCanonical]]) instead of the
     *                      plain DO-NOTHING append

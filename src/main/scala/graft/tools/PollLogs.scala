@@ -7,7 +7,9 @@ import graft.sources.{Logs, Price, Rpc}
   * logs (and, with token/oracle pairs, per-window `eth_call` price
   * probes) exactly like the reference binary (`main.go:200-242`): head
   * probe, tumbling block windows, retry/backoff, high-water-mark
-  * resume, idempotent append.
+  * resume, idempotent append. Each window is read through the
+  * [[graft.sources.RpcSource]] DataSource ([[Rpc.ingestLoop]]), the
+  * same fetch and transform `StreamRpc` streams.
   *
   * Usage: runMain graft.tools.PollLogs <endpoint> <table> [toBlock]
   *   [blockStep] [contractsCsv] [rescanDepth] [tokensCsv] [oraclesCsv] [priceTable] [backfillTs]

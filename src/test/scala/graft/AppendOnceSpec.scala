@@ -150,4 +150,20 @@ class AppendOnceSpec extends SparkSpec {
       assert(pins === before, s"refused $form")
     }
   }
+
+  test("a batch with a null block_number is refused before any write") {
+    forms.foreach { case (form, append) =>
+      val t = table(s"null_block_$form")
+      append(logs(1, 10), t)
+      // a pending log: no block_number, so no block_range to land in
+      val pending = logs(20, 23).withColumn("block_number",
+        when(col("block_number") === 21L, lit(null).cast(LongType)).otherwise(col("block_number")))
+      val e = intercept[IllegalArgumentException](append(pending, t))
+      assert(e.getMessage.contains("1 row(s) with a null block_number"), form)
+      assert(!new java.io.File(t, "block_range=__HIVE_DEFAULT_PARTITION__").exists, form)
+      assert(Logs.read(spark, t).count() === 9, form)
+      append(logs(20, 23), t) // the table still takes appends
+      assert(Logs.highWaterMark(spark, t) === 22L, form)
+    }
+  }
 }

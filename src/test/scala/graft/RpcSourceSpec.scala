@@ -171,6 +171,9 @@ class RpcSourceSpec extends SparkSpec {
       val windows = s.requests.filter(_.contains("eth_getLogs"))
       assert(windows.length === 12, windows)
       assert(windows.distinct.length === 12, windows)
+      // the drain's one head probe (prepareForTriggerAvailableNow); the
+      // latest offset each trigger reports reuses it
+      assert(s.requests.count(_.contains("eth_blockNumber")) === 1, s.requests)
       val progress = q.recentProgress.filter(_.numInputRows > 0)
       assert(progress.map(_.numInputRows).sum === 60L)
       progress.foreach { p =>
@@ -208,6 +211,35 @@ class RpcSourceSpec extends SparkSpec {
       s.refuse = Set((11L, 20L))
       val df = read(s, "fromBlock" -> "1", "toBlock" -> "20")
       assert(df.count() === 10) // first window only
+    } finally s.stop()
+  }
+
+  test("NDJSON replay and the RPC reader turn the same wire entries into the same rows") {
+    val s = newServer(20)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("rpcsrc_wire")
+      java.nio.file.Files.write(dir.resolve("logs.json"),
+        s.logs.map(_.json).mkString("\n").getBytes("UTF-8"))
+      val replayed = Logs.readNdjson(spark, dir.toString)
+      val fetched = read(s, "fromBlock" -> "1", "toBlock" -> "20")
+      assert(replayed.schema === fetched.schema)
+      assert(replayed.orderBy("block_number").collect().toSeq ===
+        fetched.orderBy("block_number").collect().toSeq)
+    } finally s.stop()
+  }
+
+  test("an entry without `removed` reads as not removed and survives canonical") {
+    val s = new MockRpcServer
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("rpcsrc_removed")
+      val kept = s.MockLog(1, "0xa", 0).json
+      val absent = s.MockLog(2, "0xa", 0).json.replace(",\"removed\":false", "")
+      assert(!absent.contains("removed"))
+      java.nio.file.Files.write(dir.resolve("logs.json"),
+        Seq(kept, absent).mkString("\n").getBytes("UTF-8"))
+      val replayed = Logs.readNdjson(spark, dir.toString)
+      assert(replayed.filter(col("removed") === false).count() === 2)
+      assert(Logs.canonical(replayed).count() === 2)
     } finally s.stop()
   }
 }

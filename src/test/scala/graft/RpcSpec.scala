@@ -137,7 +137,7 @@ class RpcSpec extends SparkSpec {
       s.failStatus = 404
       s.failNext = Int.MaxValue
       val e = intercept[RuntimeException] {
-        Rpc.blockNumber(spark, s.endpoint, retryMillis = 1, _ => ())
+        Rpc.blockNumber(s.endpoint, retryMillis = 1, _ => ())
       }
       assert(e.getMessage.contains("giving up"))
       s.failNext = 0
