@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *   re-planning a 1000-executor cluster needs.
   * - shuffle.partitions sized to local cores here; on a real cluster
   *   this is cores×(2..3) or left to AQE's coalescing.
+  * - [[HoistLiterals]], injected as a query post-planner strategy rule:
+  *   numeric, date and timestamp literals of filters and projections
+  *   are read from fields of the generated code, so a request shape
+  *   served with fresh bounds compiles once, not once per request.
   */
 object GraftSession {
   def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession.Builder =
@@ -25,6 +29,7 @@ object GraftSession {
       // vectorized reader rejects; read as long and convert in Tables
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(_.injectQueryPostPlannerStrategyRule(_ => HoistLiterals))
 
   def get(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = builder(cpus).getOrCreate()

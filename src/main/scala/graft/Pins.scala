@@ -63,7 +63,9 @@ object Pins {
         catch { case _: java.io.IOException => () }
       }
     }
-    rdds.foreach(_.unpersist(blocking))
+    // a local checkpoint is released without RDD.unpersist's
+    // lineage-truncated WARN: here the truncation is the point
+    rdds.foreach(org.apache.spark.graftbridge.RddBridge.unpersist(_, blocking))
   }
 
   // temp result dirs (no reliable checkpointDir given) live for the

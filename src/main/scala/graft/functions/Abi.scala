@@ -8,10 +8,14 @@ import org.apache.spark.sql.types._
   *
   * Re-expresses the reference's immutable SQL decode functions
   * (`/root/reference/init.sql:53-207`) as Spark `Column`-builder
-  * functions: pure compositions of built-in (codegen'd) expressions —
-  * the Spark analog of Postgres's inlinable `LANGUAGE sql IMMUTABLE`
-  * macros (no opaque UDFs, so Catalyst folds constants, prunes columns
-  * and pushes filters through them).
+  * functions that stay whole-stage codegen'd — the Spark analog of
+  * Postgres's inlinable `LANGUAGE sql IMMUTABLE` macros (no opaque
+  * UDFs, so Catalyst folds constants, prunes columns and pushes filters
+  * through them). The Native-mode integral word decodes (`to_int64` …
+  * `to_uint256`, and so `to_bool`/`to_location`/`to_size`) are one
+  * custom expression, [[AbiWord]], whose generated code is a single
+  * static call; the bytes/string/array decodes and the [[Ref]] mode are
+  * compositions of built-in expressions.
   *
   * Position convention (matches the generated views,
   * `init.sql:213-222`): `data`/`topicN` are hex strings WITH a leading
@@ -52,56 +56,45 @@ object Abi {
   private val Dec38 = DecimalType(38, 0)
   private val Dec20 = DecimalType(20, 0)
 
-  /** `len` hex chars of `data` ending at position `pos + endOff`
-    * (1-based, inclusive), zero-lpadded if the slice is short. */
-  private def hexSlice(pos: Column, data: Column, startOff: Int, len: Int): Column =
-    lpad(data.substr(pos + lit(startOff), lit(len)), len, "0")
-
-  /** One 32-bit limb (8 hex chars) as an unsigned long in [0, 2^32). */
-  private def limb(pos: Column, data: Column, startOff: Int): Column =
-    conv(hexSlice(pos, data, startOff, 8), 16, 10).cast(LongType)
+  /** One integral word decode as an [[AbiWord]] kernel; `pos` is read
+    * as an int, so a `long` position (e.g. [[toSize]]'s computed one)
+    * wraps exactly as the implicit cast of `substr`'s position does. */
+  private def word(kind: String, pos: Column, data: Column): Column = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(AbiWord(kind,
+      Cast(ColumnBridge.expression(pos), IntegerType), ColumnBridge.expression(data)))
+  }
 
   // ---- integral decodes (init.sql:53-88) -------------------------------
 
   /** F1 `to_int64(pos, data)` — signed 64-bit from the last 16 hex chars
-    * of the word (`init.sql:53-56`). `conv` is unsigned; reinterpret via
-    * 2's-complement arithmetic in decimal (exact), then narrow to long. */
-  def toInt64(pos: Column, data: Column): Column = {
-    val u = conv(hexSlice(pos, data, 49, 16), 16, 10).cast(Dec20)
-    when(u >= lit(TWO_63), u - lit(TWO_64)).otherwise(u).cast(LongType)
-  }
+    * of the word (`init.sql:53-56`): the unsigned value read in two's
+    * complement. */
+  def toInt64(pos: Column, data: Column): Column = word("int64", pos, data)
 
-  /** F2 `to_uint64(pos, data)` — two 32-bit limbs `hi*2^32 + lo`
-    * (`init.sql:58-61`); exact in DecimalType(20,0). */
-  def toUint64(pos: Column, data: Column): Column =
-    conv(hexSlice(pos, data, 49, 16), 16, 10).cast(Dec20)
+  /** F2 `to_uint64(pos, data)` — the last 16 hex chars of the word,
+    * `hi*2^32 + lo` (`init.sql:58-61`); exact in DecimalType(20,0). */
+  def toUint64(pos: Column, data: Column): Column = word("uint64", pos, data)
 
   /** F3 `to_uint32(pos, data)` (`init.sql:63-66`). */
-  def toUint32(pos: Column, data: Column): Column =
-    limb(pos, data, 57)
+  def toUint32(pos: Column, data: Column): Column = word("uint32", pos, data)
 
   /** F4 `to_int32(pos, data)` — sign-extended 32-bit. The reference's
     * body is an infinite self-recursion (`init.sql:68-72`, "--todo test
     * it"); this is the evident intent. */
-  def toInt32(pos: Column, data: Column): Column = {
-    val u = limb(pos, data, 57)
-    when(u >= lit(2147483648L), u - lit(4294967296L)).otherwise(u)
-  }
+  def toInt32(pos: Column, data: Column): Column = word("int32", pos, data)
 
-  /** F5 `to_uint128(pos, data)` — four 32-bit limbs recombined in
-    * decimal (`init.sql:74-77`). DecimalType(38,0) holds < 1e38; values
-    * above that (max uint128 ≈ 3.4e38) overflow to null (non-ANSI) —
-    * same truncated range the reference acknowledges (`init.sql:79`). */
-  def toUint128(pos: Column, data: Column): Column =
-    (limb(pos, data, 33).cast(Dec38) * lit(TWO_96) +
-      limb(pos, data, 41).cast(Dec38) * lit(TWO_64) +
-      limb(pos, data, 49).cast(Dec38) * lit(TWO_32) +
-      limb(pos, data, 57).cast(Dec38)).cast(Dec38)
+  /** F5 `to_uint128(pos, data)` — the last 32 hex chars of the word as
+    * four 32-bit limbs recombined in decimal (`init.sql:74-77`).
+    * DecimalType(38,0) holds < 1e38; values above that (max uint128 ≈
+    * 3.4e38) are null — same truncated range the reference
+    * acknowledges (`init.sql:79`). */
+  def toUint128(pos: Column, data: Column): Column = word("uint128", pos, data)
 
   /** F6 `to_uint256(pos, data)` — intentionally the uint128 decode, as
     * in the reference (`init.sql:79-83` "--todo don't downshift"). */
-  def toUint256(pos: Column, data: Column): Column =
-    toUint128(pos, data)
+  def toUint256(pos: Column, data: Column): Column = word("uint256", pos, data)
 
   /** F7 `strtol(data, bits)` — Redshift-compat shim (`init.sql:85-88`):
     * signed 64-bit from chars 49..64 of the pad-or-truncate-to-64 word;

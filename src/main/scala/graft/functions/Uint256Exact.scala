@@ -8,8 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact uint256 word decode — the upgrade path for the reference's
   * acknowledged truncation (`init.sql:79` "--todo don't downshift
-  * to_uint256 to to_uint128"; our composed [[Abi.toUint256]] keeps
-  * that truncated range for parity, and DecimalType(38,0) cannot hold
+  * to_uint256 to to_uint128"; [[Abi.toUint256]] keeps that truncated
+  * range for parity, and DecimalType(38,0) cannot hold
   * max uint256 ≈ 1.16e77 anyway).
   *
   * A custom Catalyst `Expression` (option (b) of the custom-operator

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Abi
+import graft.sources.Logs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +15,11 @@ import org.apache.spark.sql.functions._
   * word positions 2, 66, 130, … (`init.sql:215` Deposit uses
   * `to_uint256(2,…)`/`to_uint256(66,…)`).
   *
-  * Because decode expressions are Column compositions, Catalyst
-  * inlines the view, prunes to the referenced topics/data columns and
-  * pushes the topic0 equality into the Parquet scan — the Spark
+  * Because decode expressions are plain Catalyst expressions (built-in
+  * compositions, plus the codegen'd [[graft.functions.AbiWord]] word
+  * kernel for integral fields), Catalyst inlines the view, prunes to
+  * the referenced topics/data columns and pushes the topic0 equality
+  * into the Parquet scan — the Spark
   * equivalent of Postgres inlining the immutable SQL functions and
   * using the `logs(topic0)` index (`schema.sql:57`).
   */
@@ -133,8 +136,12 @@ object EventViews {
     * (`db-create.sql:1-10`: one Postgres database per
     * chain/network/stage, views inside it) onto REAL Spark catalog
     * databases: `CREATE DATABASE <chain>`, an external `logs` table
-    * at `logsPath` (canonical stored schema, FIXTURES.md §2 with
-    * `block_timestamp`), and each event as a PERMANENT view
+    * at `logsPath` declared with the canonical stored schema
+    * ([[graft.sources.Logs.schema]], FIXTURES.md §2 with
+    * `block_timestamp`; `PARTITIONED BY (block_range)` when the path
+    * holds `block_range=` directories, whose partitions are then
+    * recovered into the catalog), so no footer is read to infer it,
+    * and each event as a PERMANENT view
     * `<chain>.<viewName>` whose body is [[viewSql]] — so
     * `moonbeam.transfer_…` and `ethereum.transfer_…` answer
     * side-by-side in one session, over SQL (ServeSql/beeline) too,
@@ -164,8 +171,17 @@ object EventViews {
     Abi.registerSqlFunctions(spark, persistent = true)
     val loc = dbLocation.map(d => s" LOCATION '${d.replace("'", "''")}'").getOrElse("")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$chain`$loc")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS `$chain`.`logs` USING parquet " +
-      s"LOCATION '${logsPath.replace("'", "''")}'")
+    val root = new org.apache.hadoop.fs.Path(logsPath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val partitioned = fs.exists(root) &&
+      fs.listStatus(root).exists(st => st.isDirectory && st.getPath.getName.startsWith("block_range="))
+    val (columns, partitioning) =
+      if (partitioned) (Logs.storedSchema, " PARTITIONED BY (block_range)") else (Logs.schema, "")
+    spark.sql(s"CREATE TABLE IF NOT EXISTS `$chain`.`logs` (${columns.toDDL}) USING parquet" +
+      s"$partitioning LOCATION '${logsPath.replace("'", "''")}'")
+    // a partitioned table over existing directories starts with no
+    // partitions in the catalog; this registers the ranges written since
+    if (partitioned) spark.sql(s"ALTER TABLE `$chain`.`logs` RECOVER PARTITIONS")
     // re-registration after the logs path was OVERWRITTEN: the
     // catalog's table-relation cache keys on the TABLE NAME, so a
     // path-level refresh (refreshByPath) does NOT invalidate it and

@@ -133,7 +133,7 @@ object Logs {
     df.select(schema.fieldNames.map(col) :+
       (col("block_number") / blocksPerPartition).cast(LongType).as("block_range"): _*)
 
-  private val storedSchema: StructType = schema.add("block_range", LongType)
+  private[graft] val storedSchema: StructType = schema.add("block_range", LongType)
 
   /** The one way stored logs files are opened: with the declared
     * schema, `block_range` typed from the partition directories under

@@ -242,22 +242,25 @@ object RpcSource {
       val entries = Rpc.exchange(endpoint, "eth_getLogs",
         s"""[{$addrFilter"fromBlock":"0x${from.toHexString}","toBlock":"0x${to.toHexString}"}]""",
         retryMillis).fold(Seq.empty[JsonNode])(_.elements().asScala.toSeq)
-      def hexLongOf(log: JsonNode, f: String): Long = {
+      // an absent or null quantity (a pending log's blockNumber,
+      // transactionIndex, logIndex) reads as null, as in Logs.fromWire,
+      // so the append refuses the row instead of storing it at block 0
+      def hexLongOf(log: JsonNode, f: String): java.lang.Long = {
         val n = log.get(f)
-        if (n == null || n.isNull) 0L else Rpc.hexLong(n)
+        if (n == null || n.isNull) null else Long.box(Rpc.hexLong(n))
       }
       // backfill extension (get_logs.go:118-119 leaves the column
       // forever null): one header probe per DISTINCT block in THIS
       // window, executed executor-side — a 1000-executor backfill
       // spreads the probes exactly like the log pulls themselves
-      val tsMicros: Map[Long, Long] =
+      val tsMicros: Map[java.lang.Long, Long] =
         if (!backfillTs) Map.empty
-        else entries.map(hexLongOf(_, "blockNumber")).distinct.flatMap(b =>
+        else entries.flatMap(e => Option(hexLongOf(e, "blockNumber"))).distinct.flatMap(b =>
           Rpc.getBlockTimestamp(endpoint, b, retryMillis)
             .map(sec => b -> sec * 1000000L)).toMap
       entries.iterator.map { log =>
         def s(f: String): UTF8String = UTF8String.fromString(log.path(f).asText(null))
-        def hexLong(f: String): Long = hexLongOf(log, f)
+        def hexLong(f: String): java.lang.Long = hexLongOf(log, f)
         val topics = log.get("topics")
         def topic(i: Int): UTF8String =
           if (topics != null && topics.size > i) UTF8String.fromString(topics.get(i).asText)

@@ -166,4 +166,32 @@ class AppendOnceSpec extends SparkSpec {
       assert(Logs.highWaterMark(spark, t) === 22L, form)
     }
   }
+
+  test("releasing an append's pin frees it without the lineage-truncated WARN") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender("graft-spec-capture",
+        null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    val root = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    capture.start()
+    root.addAppender(capture)
+    val before = pins
+    try {
+      forms.foreach { case (form, append) =>
+        val t = table(s"quiet_$form")
+        append(logs(1, 50), t)
+        append(logs(25, 75), t)
+      }
+      Price.appendIdempotent(spark, prices(1, 50), table("quiet_price"))
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(pins === before)
+    assert(!seen.toArray.exists(_.toString.contains("was locally checkpointed")),
+      seen.toArray.mkString("\n"))
+  }
 }

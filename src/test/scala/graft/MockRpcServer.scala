@@ -10,12 +10,18 @@ import java.nio.charset.StandardCharsets
   * for the retry/skip paths. */
 class MockRpcServer {
 
-  case class MockLog(block: Long, address: String, idx: Long, removed: Boolean = false) {
+  /** One served log; a `pending` one (served in `block`'s window) has a
+    * null blockHash, blockNumber, transactionIndex and logIndex, as a
+    * node reports a log not yet in a block. */
+  case class MockLog(block: Long, address: String, idx: Long, removed: Boolean = false,
+      pending: Boolean = false) {
+    private def q(v: String): String = if (pending) "null" else "\"" + v + "\""
     def json: String =
       s"""{"address":"$address","topics":["0xsig","0x${"%064x".format(block)}"],""" +
-        s""""data":"0x${"%064x".format(block * 3)}","blockHash":"0xb${block.toHexString}",""" +
-        s""""blockNumber":"0x${block.toHexString}","transactionHash":"0xt$block","transactionIndex":"0x0",""" +
-        s""""logIndex":"0x${idx.toHexString}","removed":$removed}"""
+        s""""data":"0x${"%064x".format(block * 3)}","blockHash":${q("0xb" + block.toHexString)},""" +
+        s""""blockNumber":${q("0x" + block.toHexString)},"transactionHash":"0xt$block",""" +
+        s""""transactionIndex":${q("0x0")},""" +
+        s""""logIndex":${q("0x" + idx.toHexString)},"removed":$removed}"""
   }
 
   @volatile var logs: Seq[MockLog] = Seq.empty

@@ -242,4 +242,26 @@ class RpcSourceSpec extends SparkSpec {
       assert(Logs.canonical(replayed).count() === 2)
     } finally s.stop()
   }
+
+  test("a pending log (null blockNumber) reads as null and the append refuses it") {
+    val s = new MockRpcServer
+    try {
+      s.logs = Seq(s.MockLog(1, "0xa", 0), s.MockLog(2, "0xa", 1, pending = true))
+      s.head = 2
+      val df = read(s, "fromBlock" -> "1", "toBlock" -> "2", "backfillTimestamps" -> "true")
+      val pending = df.filter(col("block_number").isNull).collect()
+      assert(pending.length === 1)
+      assert(pending(0).isNullAt(pending(0).fieldIndex("transaction_index")))
+      assert(pending(0).isNullAt(pending(0).fieldIndex("log_index")))
+      assert(pending(0).isNullAt(pending(0).fieldIndex("block_timestamp")))
+      // the timestamp probe asks for the mined block only
+      assert(s.requests.filter(_.contains("eth_getBlockByNumber"))
+        .forall(_.contains("\"0x1\"")))
+      assert(df.filter(col("block_number") === 1L && col("block_timestamp").isNotNull).count() === 1)
+      val t = java.nio.file.Files.createTempDirectory("rpcsrc_pending").toString + "/t"
+      val e = intercept[IllegalArgumentException](Logs.appendIdempotent(spark, df, t))
+      assert(e.getMessage.contains("1 row(s) with a null block_number"))
+      assert(!new java.io.File(t).exists)
+    } finally s.stop()
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.EventViews
 import graft.sources.{Logs, Price, Snapshots}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -85,6 +86,31 @@ class StoredSchemaSpec extends SparkSpec {
       Price.read(spark, price)
       Snapshots.read(spark, logs)
     }.isEmpty)
+  }
+
+  test("registerChainNamespace declares the logs columns: no job, every range read") {
+    val ranged = table("chain_ranged")
+    Logs.appendIdempotent(spark, batch(row(1, 0), row(far, 0)), ranged)
+    val flat = table("chain_flat")
+    Logs.read(spark, ranged).write.parquet(flat)
+    val base = Files.createTempDirectory("chain_db").toString
+    assert(jobsStartedBy {
+      EventViews.registerChainNamespace(spark, "graft_declared_ranged", ranged,
+        dbLocation = Some(s"$base/r"))
+      EventViews.registerChainNamespace(spark, "graft_declared_flat", flat,
+        dbLocation = Some(s"$base/f"))
+    }.isEmpty)
+    val r = spark.table("graft_declared_ranged.logs")
+    assert(r.schema === Logs.storedSchema)
+    assertSameLogs(r, Logs.read(spark, ranged))
+    val f = spark.table("graft_declared_flat.logs")
+    assert(f.schema === Logs.schema)
+    assertSameLogs(f, spark.read.parquet(flat))
+    // a range written after registration is served once re-registered
+    Logs.appendIdempotent(spark, batch(row(2 * far, 0)), ranged)
+    EventViews.registerChainNamespace(spark, "graft_declared_ranged", ranged,
+      dbLocation = Some(s"$base/r"))
+    assert(spark.table("graft_declared_ranged.logs").count() === 3)
   }
 
   test("declared open equals footer inference on every writer's output") {
