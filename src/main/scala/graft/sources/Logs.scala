@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.functions.Abi
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,13 +24,15 @@ import org.apache.spark.sql.types._
   *
   * Scale design: the table is laid out as Parquet partitioned by
   * `block_range` (block_number / blocksPerPartition). Every operation
-  * here — idempotent append's anti-join, the high-water-mark scan,
-  * reorg dedup — prunes to the block partitions it touches. An append
-  * costs its batch, not the table: the batch is evaluated once and its
-  * pin released on exit, throw included ([[pinned]]), and the DO-NOTHING
-  * probe reads only the batch's block window, exact by the PK →
-  * `block_number` rule ([[Pinned.unseen]]). Within a partition, files
-  * are sorted by (address, topic0): the stand-in for the reference's 9
+  * here — idempotent append's probe, the high-water-mark scan, reorg
+  * dedup — prunes to the block partitions it touches. An append costs
+  * its batch, not the table: one SQL execution dedups the batch and
+  * writes it to a private stage, and the DO-NOTHING probe opens only
+  * the stored files whose footer `block_number` window meets the
+  * batch's, and reads them only inside that window — exact because a
+  * PK fixes its block ([[Pinned.unseen]]); the stage is then published
+  * by rename ([[appendIdempotent]]). Within a partition, files are
+  * sorted by (address, topic0): the stand-in for the reference's 9
   * btree indexes (`schema.sql:54-62`) via parquet min/max + dictionary
   * pushdown.
   *
@@ -145,11 +148,11 @@ object Logs {
       .select(schema.fieldNames.map(col): _*)
 
   private[sources] def empty(spark: SparkSession, of: StructType = schema): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), of)
+    spark.createDataFrame(new java.util.ArrayList[Row](), of)
 
   private def rangeDir(tablePath: String, r: Long): String = s"$tablePath/block_range=$r"
 
-  /** One append's input after [[pinned]]: `n` rows read from the pin,
+  /** One append's input after [[pinned]] or a stage write: `n` rows,
     * `nullBlocks` of them without a `block_number`, `block_number`
     * window `[lo, hi]`, sorted `block_range` values `ranges` (empty
     * without that column, as for a `price` batch). */
@@ -165,41 +168,42 @@ object Logs {
         key, "left_anti")
   }
 
+  /** The facts both append paths gather in their one pass over a batch
+    * (`observe`), in [[Pinned]]'s order; [[decode]] reads them back. */
+  private def factColumns(batch: DataFrame): Seq[Column] =
+    Seq(count(lit(1)), count("block_number"),
+      coalesce(min("block_number"), lit(0L)), coalesce(max("block_number"), lit(-1L))) ++
+      (if (batch.columns.contains("block_range")) Seq(collect_set("block_range")) else Nil)
+
+  private def decode(f: Row, rows: DataFrame): Pinned =
+    Pinned(rows, f.getLong(0), f.getLong(0) - f.getLong(1), f.getLong(2), f.getLong(3),
+      if (f.length > 4) f.getSeq[Long](4).sorted else Nil)
+
   /** Evaluate `batch` exactly once: one `localCheckpoint` pass pins its
     * rows and gathers its [[Pinned]] facts (`observe`), so the emptiness
     * test, the ranges, the probe and the write read the pin instead of
     * re-running the upstream (RPC fetch, JSON parse, dedup shuffle). The
     * pin is released when `body` returns or throws. */
   private[sources] def pinned[T](batch: DataFrame)(body: Pinned => T): T = {
-    val facts = Seq(count(lit(1)), count("block_number"),
-      coalesce(min("block_number"), lit(0L)), coalesce(max("block_number"), lit(-1L))) ++
-      (if (batch.columns.contains("block_range")) Seq(collect_set("block_range")) else Nil)
+    val facts = factColumns(batch)
     val observed = batch.observe("graft_append_facts", facts.head, facts.tail: _*)
     val rows = observed.localCheckpoint(eager = true)
-    try {
-      val f = observed.queryExecution.observedMetrics("graft_append_facts")
-      body(Pinned(rows, f.getLong(0), f.getLong(0) - f.getLong(1), f.getLong(2), f.getLong(3),
-        if (f.length > 4) f.getSeq[Long](4).sorted else Nil))
-    } finally graft.Pins.release(rows)
+    try body(decode(observed.queryExecution.observedMetrics("graft_append_facts"), rows))
+    finally graft.Pins.release(rows)
   }
 
-  /** [[pinned]] for a logs batch, tagged with its `block_range`. A row
-    * without a `block_number` (a pending log) is refused before any
-    * write: it would land in `block_range=__HIVE_DEFAULT_PARTITION__`,
-    * which no later read or append of the table can parse. */
-  private def pinnedLogs[T](batch: DataFrame)(body: Pinned => T): T =
-    pinned(withBlockRange(batch)) { b =>
-      require(b.nullBlocks == 0, s"logs batch has ${b.nullBlocks} row(s) with a null " +
-        "block_number (pending logs); nothing was written")
-      body(b)
-    }
+  /** A logs batch holding a row without a `block_number` (a pending
+    * log) is refused whole: that row would land in
+    * `block_range=__HIVE_DEFAULT_PARTITION__`, which no later read or
+    * append of the table can parse. */
+  private def requireBlocks(b: Pinned): Unit =
+    require(b.nullBlocks == 0, s"logs batch has ${b.nullBlocks} row(s) with a null " +
+      "block_number (pending logs); nothing was written")
 
-  /** [[Pinned.unseen]] against the stored `ranges` of the logs table;
-    * no probe at all when the batch touches no stored range. */
-  private def unseen(spark: SparkSession, b: Pinned, tablePath: String,
-      ranges: Seq[Long]): DataFrame =
-    if (ranges.isEmpty) b.rows
-    else b.unseen(open(spark, tablePath, ranges.map(rangeDir(tablePath, _)): _*), pk)
+  /** [[pinned]] for a logs batch, tagged with its `block_range` and
+    * refused before any write by [[requireBlocks]]. */
+  private def pinnedLogs[T](batch: DataFrame)(body: Pinned => T): T =
+    pinned(withBlockRange(batch)) { b => requireBlocks(b); body(b) }
 
   /** Appends write and probe `block_range` partitions only, so against
     * an unpartitioned table (data files at its root, which [[read]] and
@@ -223,111 +227,162 @@ object Logs {
     * signature universe); ~10 bits/value at the default 1% fpp ≈
     * 0.1% file overhead. Dictionary + sort stay as-is — blooms are
     * additive. */
-  private def bloomWriter(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+  private def bloomWriter(df: DataFrame): DataFrameWriter[Row] =
     df.write
       .option("parquet.bloom.filter.enabled#address", "true")
       .option("parquet.bloom.filter.expected.ndv#address", "100000")
       .option("parquet.bloom.filter.enabled#topic0", "true")
       .option("parquet.bloom.filter.expected.ndv#topic0", "10000")
 
-  /** The append layout: one file per touched range per call, sorted by
-    * (address, topic0), partitioned by `block_range`. */
-  private def rangeWriter(rows: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    bloomWriter(rows.repartition(col("block_range")).sortWithinPartitions("address", "topic0"))
+  /** The append layout for rows clustered by `block_range`: one file
+    * per touched range per call, sorted by (address, topic0). The sort
+    * leads with `block_range`, the ordering the partitioned write
+    * requires, so the planner keeps it rather than re-sort and drop it. */
+  private def rangeWriter(clustered: DataFrame): DataFrameWriter[Row] =
+    bloomWriter(clustered.sortWithinPartitions("block_range", "address", "topic0"))
       .partitionBy("block_range")
 
   /** S5: idempotent append — the engine's `INSERT … ON CONFLICT DO
-    * NOTHING`. The PK-deduped batch is evaluated once ([[pinned]]), its
-    * rows anti-joined against ONLY the stored block-range partitions it
-    * overlaps, inside its block window ([[Pinned.unseen]]), then appended
-    * partitioned by block_range, sorted by (address, topic0) within
-    * files. An empty batch writes nothing and never creates the table.
+    * NOTHING` — in three steps:
+    * 1. Stage: one SQL execution clusters the batch by `block_range`,
+    *    dedups it on `block_range` + PK in that same exchange (exact:
+    *    the PK fixes the block, [[Pinned.unseen]]), observes its
+    *    [[Pinned]] facts and writes it through [[rangeWriter]] into a
+    *    private `_graft_stage/<uuid>`, which no reader lists.
+    * 2. Decide: an empty batch publishes nothing and never creates the
+    *    table, and a pending log refuses the whole batch
+    *    ([[requireBlocks]]). Otherwise only the stored files of the
+    *    touched ranges whose footer `block_number` window meets the
+    *    batch's `[lo, hi]` ([[probeFiles]]) are probed: the staged rows
+    *    of those ranges are anti-joined against them into a second
+    *    stage. With no overlapping file there is no probe at all.
+    * 3. Publish: each staged file is renamed into its range dir as
+    *    `stage-<uuid>-…` (metadata-only on HDFS/local); both stages are
+    *    deleted, throw included.
     *
     * `staged = true` is the CONCURRENT-WRITER form (the reference runs
-    * any number of parallel archivers against Postgres; per-chain
-    * deploys encourage it): the batch is written to a private
-    * `_graft_stage/<uuid>` directory — so concurrent jobs never share
-    * a `_temporary` tree, the classic lost-files hazard of parallel
-    * FileOutputCommitter appends — and the finished files are then
-    * renamed into the live partition dirs under stage-unique names
-    * (metadata-only on HDFS/local). Two writers racing the SAME PK can
-    * both land it (each one's anti-join probe predates the other's
-    * rename); that duplicate is exactly what the canonical read path
-    * and compaction dedup by PK, same as re-delivered batches. Pair
-    * with [[Snapshots.commitWithRetry]] for the snapshot step. */
+    * any number of parallel archivers against Postgres). Steps 2 and 3
+    * hold the per-range locks that `compact` and canonicalization swap
+    * under, in ascending range order (no deadlock); the private stage
+    * write runs unlocked. The locks keep a publish from re-creating a
+    * partition dir a swap just parked, or from landing a file between
+    * a rewrite's read and its park. Rewriters wait for an append's
+    * listing, probe and renames; an appender waits for anyone. Two
+    * writers racing the SAME PK can both land it (each probe predates
+    * the other's rename); the canonical read and compaction dedup it by
+    * PK, as they do re-delivered batches. Pair with
+    * [[Snapshots.commitWithRetry]]. */
   def appendIdempotent(spark: SparkSession, batch: DataFrame, tablePath: String,
       canonicalize: Boolean = false, staged: Boolean = false): Unit =
     if (canonicalize) appendCanonical(spark, batch, tablePath)
-    else pinnedLogs(batch.dropDuplicates(pk)) { b =>
-      if (b.n > 0 && staged) appendStaged(spark, b, tablePath)
-      else if (b.n > 0) {
-        val stored = committedRanges(spark, tablePath)
-        requirePartitioned(tablePath, stored)
-        rangeWriter(unseen(spark, b, tablePath, b.ranges.filter(stored.getOrElse(Nil).toSet)))
-          .mode("append").parquet(tablePath)
+    else {
+      val root = new Path(tablePath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val created = !fs.exists(root)
+      val stage = new Path(root, s"_graft_stage/${java.util.UUID.randomUUID()}")
+      val probed = stage.suffix("-probe")
+      try {
+        val facts = org.apache.spark.sql.Observation("graft_append_facts")
+        val deduped = withBlockRange(batch).repartition(col("block_range"))
+          .dropDuplicates("block_range" +: pk)
+        val cols = factColumns(deduped)
+        rangeWriter(deduped.observe(facts, cols.head, cols.tail: _*)).parquet(stage.toString)
+        val b = decode(scala.concurrent.Await.result(facts.future, scala.concurrent.duration.Duration.Inf),
+          spark.read.schema(storedSchema).option("basePath", stage.toString).parquet(stage.toString))
+        requireBlocks(b)
+        def locked(body: => Unit): Unit =
+          if (staged) b.ranges.foldRight(() => body) { (r, acc) => () =>
+            withPartitionLock(fs, tablePath, r, kind = "append",
+              waitFor = Set("append", "rewrite"), waitMs = 600000L)(acc())
+          }.apply()
+          else body
+        if (b.n > 0) locked {
+          val stored = b.ranges.flatMap(r => probeFiles(fs, tablePath, r, b.lo, b.hi).map(r -> _)).toMap
+          if (stored.isEmpty) requirePartitioned(tablePath, committedRanges(spark, tablePath))
+          val probe = stored.filter(_._2.nonEmpty)
+          if (probe.nonEmpty)
+            rangeWriter(b.copy(rows = b.rows.filter(col("block_range").isin(probe.keys.toSeq: _*)))
+              .unseen(open(spark, tablePath, probe.values.flatten.toSeq: _*), pk)
+              .repartition(col("block_range"))).parquet(probed.toString)
+          b.ranges.foreach(r => publish(fs, if (probe.contains(r)) probed else stage, tablePath, r))
+        }
+        // Spark's listing caches for the table predate the renames
+        if (b.n > 0) spark.catalog.refreshByPath(tablePath)
+      } finally {
+        Seq(stage, probed).foreach(fs.delete(_, true))
+        (Seq(stage.getParent) ++ (if (created) Seq(root) else Nil)).foreach { dir =>
+          try if (fs.exists(dir) && fs.listStatus(dir).isEmpty) fs.delete(dir, false)
+          catch { case _: java.io.IOException => () } // refilled: another writer's
+        }
       }
     }
 
-  /** Staged (concurrent-writer) form, serialized per partition against
-    * in-place rewrites (r11): the anti-join read, the staged write and
-    * the publish renames all run under the SAME per-range lock
-    * `Logs.compact`/canonicalization swap under — closing two real race
-    * windows the SnapshotsSpec stress tests sat on top of: (1) a publish
-    * rename re-creating a partition dir the swap just parked (both swap
-    * renames then fail), and (2) a staged file landing between the
-    * rewrite's read and its park, getting parked with the originals and
-    * silently vanishing from the live table. Appends hold the lock for
-    * seconds (batch-sized work), so rewriters WAIT for append holders
-    * rather than failing fast; an appender waits for anyone (a
-    * partition rewrite is minutes at worst, and its own data isn't
-    * visible until the renames anyway). Lock order is ascending by
-    * range — multi-range appenders can never deadlock each other. */
-  private def appendStaged(spark: SparkSession, b: Pinned, tablePath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def underLocks[T](rs: Seq[Long])(body: => T): T =
-      rs.foldRight(() => body) { (r, acc) => () =>
-        withPartitionLock(fs, tablePath, r, kind = "append",
-          waitFor = Set("append", "rewrite"), waitMs = 600000L)(acc())
-      }.apply()
-    underLocks(b.ranges) {
-      // partition-scoped anti-join: list ONLY the incoming ranges'
-      // dirs (no full-table partition discovery — at 10^5 partitions
-      // the root listing dwarfed the batch) and probe just their rows;
-      // the root is listed only when none of them exists yet
-      val existing = b.ranges.filter(r =>
-        fs.exists(new org.apache.hadoop.fs.Path(rangeDir(tablePath, r))))
-      if (existing.isEmpty) requirePartitioned(tablePath, committedRanges(spark, tablePath))
-      val stageId = java.util.UUID.randomUUID().toString
-      val stageDir = new org.apache.hadoop.fs.Path(s"$tablePath/_graft_stage/$stageId")
-      rangeWriter(unseen(spark, b, tablePath, existing)).mode("overwrite").parquet(stageDir.toString)
-      try {
-        fs.listStatus(stageDir).toSeq
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("block_range="))
-          .foreach { d =>
-            val dest = new org.apache.hadoop.fs.Path(tablePath, d.getPath.getName)
-            fs.mkdirs(dest)
-            fs.listStatus(d.getPath).toSeq
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .foreach { f =>
-                val to = new org.apache.hadoop.fs.Path(dest,
-                  s"stage-$stageId-${f.getPath.getName}")
-                if (!fs.rename(f.getPath, to))
-                  throw new java.io.IOException(s"staged append: cannot publish $to")
-              }
-          }
-      } finally {
-        fs.delete(stageDir, true)
-        // drop the _graft_stage root when this was the last stage in it
-        val root = stageDir.getParent
-        if (fs.exists(root) && fs.listStatus(root).isEmpty) fs.delete(root, false)
+  /** Rename the data files `stage` holds for range `r` into the range's
+    * dir under stage-unique names (a probe that found every row stored
+    * leaves none). */
+  private def publish(fs: FileSystem, stage: Path, tablePath: String, r: Long): Unit = {
+    val from = new Path(stage, s"block_range=$r")
+    if (fs.exists(from)) {
+      val dest = new Path(rangeDir(tablePath, r))
+      fs.mkdirs(dest)
+      fs.listStatus(from).filter(isDataFile).foreach { f =>
+        val to = new Path(dest, s"stage-${stage.getName}-${f.getPath.getName}")
+        if (!fs.rename(f.getPath, to)) throw new java.io.IOException(s"append: cannot publish $to")
       }
     }
-    // the anti-join above cached these partition dirs' listings; the
-    // renames changed them behind the cache (the minhashWriteIndex
-    // stale-FileStatusCache lesson) — refresh so same-session readers
-    // and the NEXT batch's anti-join see the published files
-    spark.catalog.refreshByPath(tablePath)
+  }
+
+  private def isDataFile(f: FileStatus): Boolean = f.isFile && f.getPath.getName.endsWith(".parquet")
+
+  /** Each stored file's `block_number` window from its footer
+    * statistics, read once per (name, length, mtime) and kept per range
+    * dir: a listing replaces its dir's entry, so files gone from the dir
+    * (compacted, swapped) drop out. `None` = unknown (a row group
+    * without statistics): every batch probes that file. A backfill
+    * leaves each range behind for good, so past [[footerDirs]] dirs the
+    * cache starts over rather than grow with the table. */
+  private val footerWindows =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[(String, Long, Long), Option[(Long, Long)]]]()
+  private val footerDirs = 1024
+
+  /** The stored files of range `r` whose `block_number` window meets
+    * `[lo, hi]`, from one listing of its dir; `None` when the range is
+    * not stored. Only these can hold a PK of a batch inside `[lo, hi]`. */
+  private def probeFiles(fs: FileSystem, tablePath: String, r: Long,
+      lo: Long, hi: Long): Option[Seq[String]] = {
+    val dir = rangeDir(tablePath, r)
+    val listed = try Some(fs.listStatus(new Path(dir)).toSeq.filter(isDataFile))
+      catch { case _: java.io.FileNotFoundException => None }
+    listed.map { files =>
+      val known = footerWindows.getOrDefault(dir, Map.empty)
+      val windows = files.map { f =>
+        val key = (f.getPath.getName, f.getLen, f.getModificationTime)
+        key -> known.getOrElse(key, footerWindow(fs.getConf, f))
+      }
+      if (footerWindows.size >= footerDirs) footerWindows.clear()
+      footerWindows.put(dir, windows.toMap)
+      files.zip(windows).collect {
+        case (f, (_, w)) if w.forall { case (a, z) => a <= hi && lo <= z } => f.getPath.toString
+      }
+    }
+  }
+
+  /** The union of `f`'s row-group `block_number` min/max statistics;
+    * `None` when a row group has none (or the file has no row group). */
+  private def footerWindow(conf: org.apache.hadoop.conf.Configuration, f: FileStatus): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    // options from `conf`: the one-argument `open` builds a fresh
+    // Configuration, which parses the Hadoop XML defaults on every call
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    val windows = try reader.getFooter.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+      .find(_.getPath.toDotString == "block_number").map(_.getStatistics).collect {
+        case s: org.apache.parquet.column.statistics.LongStatistics if s.hasNonNullValue =>
+          (s.getMin, s.getMax)
+      }) finally reader.close()
+    Option.when(windows.nonEmpty && windows.forall(_.isDefined))(
+      (windows.flatten.map(_._1).min, windows.flatten.map(_._2).max))
   }
 
   /** The table's committed state from one root listing (no Spark job,
@@ -340,7 +395,7 @@ object Logs {
     * the first micro-batch sees 0 rows (observed live: the StreamLogs
     * stats loop killed the stream mid-first-batch). */
   private def committedRanges(spark: SparkSession, tablePath: String): Option[Seq[Long]] = {
-    val p = new org.apache.hadoop.fs.Path(tablePath)
+    val p = new Path(tablePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
@@ -413,7 +468,7 @@ object Logs {
       ranges: Option[Seq[Long]] = None,
       targetFileBytes: Long = 512L << 20,
       parallelism: Int = 4): Unit = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val targetRanges = ranges.getOrElse(committedRanges(spark, tablePath).getOrElse(Nil))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -440,11 +495,11 @@ object Logs {
   /** Swap-rewrite range `r` as `merge` of its stored rows (analytic
     * columns, no `block_range`), opened under the partition lock, in
     * sorted files of about `targetFileBytes` each. */
-  private def rewriteRange(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+  private def rewriteRange(spark: SparkSession, fs: FileSystem,
       tablePath: String, r: Long, targetFileBytes: Long = 512L << 20)(
       merge: DataFrame => DataFrame): Unit = {
     val partDir = rangeDir(tablePath, r)
-    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(partDir)).getLength
+    val bytes = fs.getContentSummary(new Path(partDir)).getLength
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     swapInPartition(fs, tablePath, r) { tmp =>
       bloomWriter(merge(open(spark, tablePath, partDir)).repartition(nFiles)
@@ -511,13 +566,13 @@ object Logs {
     * stores without atomic create-no-overwrite and mtime-preserving
     * rename it degrades the same way as every file-level CAS in this
     * layer (documented at [[graft.sources.Snapshots.publish]]). */
-  private[sources] def withPartitionLock[T](fs: org.apache.hadoop.fs.FileSystem,
+  private[sources] def withPartitionLock[T](fs: FileSystem,
       tablePath: String, r: Long,
       kind: String = "rewrite",
       waitFor: Set[String] = Set("append"),
       waitMs: Long = 120000L)(body: => T): T =
     graft.util.DirLock.withLock(fs,
-      new org.apache.hadoop.fs.Path(s"$tablePath/.graft_rewrite_lock"),
+      new Path(s"$tablePath/.graft_rewrite_lock"),
       s"block_range=$r", kind = kind, waitFor = waitFor, waitMs = waitMs)(body)
 
   /** Crash-safe partition rewrite: `write` lands the replacement in a
@@ -527,11 +582,11 @@ object Logs {
     * and `write` may freely READ the live partition it replaces.
     * Guarded by [[withPartitionLock]]: same-partition rewrites
     * serialize, disjoint-partition rewrites don't contend. */
-  private def swapInPartition(fs: org.apache.hadoop.fs.FileSystem, tablePath: String,
+  private def swapInPartition(fs: FileSystem, tablePath: String,
       r: Long)(write: String => Unit): Unit = withPartitionLock(fs, tablePath, r) {
-    val partDir = new org.apache.hadoop.fs.Path(rangeDir(tablePath, r))
-    val tmp = new org.apache.hadoop.fs.Path(s"$tablePath/.graft_compact_tmp/block_range=$r")
-    val bak = new org.apache.hadoop.fs.Path(s"$tablePath/.graft_compact_bak/block_range=$r")
+    val partDir = new Path(rangeDir(tablePath, r))
+    val tmp = new Path(s"$tablePath/.graft_compact_tmp/block_range=$r")
+    val bak = new Path(s"$tablePath/.graft_compact_bak/block_range=$r")
     fs.delete(tmp, true)
     write(tmp.toString)
     fs.delete(bak, true)
@@ -555,19 +610,17 @@ object Logs {
     * longer invalidates pinned readers at all. [[Snapshots.vacuum]]
     * is the GC: it deletes retained files once no kept manifest
     * references them. Untracked tables keep the plain delete. */
-  private def retainOrDelete(fs: org.apache.hadoop.fs.FileSystem, tablePath: String,
-      r: Long, bak: org.apache.hadoop.fs.Path): Unit = {
-    val tracked = fs.exists(new org.apache.hadoop.fs.Path(s"$tablePath/_graft_manifest"))
+  private def retainOrDelete(fs: FileSystem, tablePath: String,
+      r: Long, bak: Path): Unit = {
+    val tracked = fs.exists(new Path(s"$tablePath/_graft_manifest"))
     if (tracked) {
-      val dest = new org.apache.hadoop.fs.Path(s"$tablePath/_graft_retained/block_range=$r")
+      val dest = new Path(s"$tablePath/_graft_retained/block_range=$r")
       fs.mkdirs(dest)
-      fs.listStatus(bak).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .foreach { st =>
-          val d = new org.apache.hadoop.fs.Path(dest, st.getPath.getName)
-          if (!fs.rename(st.getPath, d))
-            throw new java.io.IOException(s"retention: cannot park ${st.getPath} at $d")
-        }
+      fs.listStatus(bak).filter(isDataFile).foreach { st =>
+        val d = new Path(dest, st.getPath.getName)
+        if (!fs.rename(st.getPath, d))
+          throw new java.io.IOException(s"retention: cannot park ${st.getPath} at $d")
+      }
     }
     fs.delete(bak, true)
   }
@@ -581,16 +634,16 @@ object Logs {
     * in-flight tmp survives; if it races the other way (parent
     * deleted just before the concurrent writer's first file), the
     * writer's own mkdirs recreates it. */
-  private def clearSwapDirs(fs: org.apache.hadoop.fs.FileSystem, tablePath: String,
+  private def clearSwapDirs(fs: FileSystem, tablePath: String,
       ranges: Iterable[Long]): Unit = {
     ranges.foreach { r =>
-      fs.delete(new org.apache.hadoop.fs.Path(
+      fs.delete(new Path(
         s"$tablePath/.graft_compact_tmp/block_range=$r"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(
+      fs.delete(new Path(
         s"$tablePath/.graft_compact_bak/block_range=$r"), true)
     }
     Seq(".graft_compact_tmp", ".graft_compact_bak").foreach { d =>
-      try fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/$d"), false)
+      try fs.delete(new Path(s"$tablePath/$d"), false)
       catch { case _: java.io.IOException => () } // non-empty: a concurrent rewrite owns it
     }
   }
@@ -639,9 +692,9 @@ object Logs {
       requirePartitioned(tablePath, stored)
       val (overlapping, fresh) = b.ranges.partition(stored.getOrElse(Nil).toSet)
       if (fresh.nonEmpty)
-        rangeWriter(b.rows.filter(col("block_range").isin(fresh: _*))).mode("append").parquet(tablePath)
-      val fs = new org.apache.hadoop.fs.Path(tablePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        rangeWriter(b.rows.filter(col("block_range").isin(fresh: _*)).repartition(col("block_range")))
+          .mode("append").parquet(tablePath)
+      val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
       overlapping.foreach(r => rewriteRange(spark, fs, tablePath, r)(live => latestPerPk(
         live.unionByName(b.rows.filter(col("block_range") === r).drop("block_range")))))
       clearSwapDirs(fs, tablePath, overlapping)

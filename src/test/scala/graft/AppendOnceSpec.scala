@@ -8,6 +8,7 @@ import org.apache.spark.util.LongAccumulator
 import java.nio.file.Files
 import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** The append path's cost contract: every append form evaluates its
   * batch exactly once, its DO-NOTHING probe reads only the batch's
@@ -41,17 +42,22 @@ class AppendOnceSpec extends SparkSpec {
   private def dupPks(t: String): Long =
     Logs.read(spark, t).groupBy(Logs.pk.map(col): _*).count().filter(col("count") > 1).count()
 
-  /** Records read by the tasks of the jobs `body` starts (tagged via a
+  /** Records read by the tasks of the jobs `body` starts. */
+  private def recordsReadBy(body: => Unit): Long = jobsAndRecordsReadBy(body)._2
+
+  /** Jobs `body` starts and records their tasks read (tagged via a
     * local property; a sentinel job flushes the listener bus). */
-  private def recordsReadBy(body: => Unit): Long = {
+  private def jobsAndRecordsReadBy(body: => Unit): (Int, Long) = {
     val key = "graft.spec.phase"
     val stageTag = new ConcurrentHashMap[Int, String]()
     val read = new AtomicLong()
+    val jobs = new AtomicLong()
     val sentinel = new LinkedBlockingQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val tag = Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse("")
         e.stageIds.foreach(stageTag.put(_, tag))
+        if (tag == "body") jobs.incrementAndGet()
         if (tag == "sentinel") sentinel.put(tag)
       }
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
@@ -65,7 +71,7 @@ class AppendOnceSpec extends SparkSpec {
       try body finally sc.setLocalProperty(key, "sentinel")
       spark.range(1).count()
       assert(sentinel.poll(60, TimeUnit.SECONDS) != null)
-      read.get
+      (jobs.get.toInt, read.get)
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)
@@ -126,6 +132,22 @@ class AppendOnceSpec extends SparkSpec {
     val price = table("empty_price")
     Price.appendIdempotent(spark, prices(0, 0), price)
     assert(!new java.io.File(price).exists)
+  }
+
+  test("an empty batch without input partitions writes nothing, into a new or a stored table") {
+    // no map task runs, so the stage write's observed facts must still arrive
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      logs(0, 0).schema)
+    assert(none.rdd.getNumPartitions === 0)
+    Seq("plain" -> false, "staged" -> true).foreach { case (form, staged) =>
+      val t = table(s"no_parts_$form")
+      Logs.appendIdempotent(spark, none, t, staged = staged)
+      assert(!new java.io.File(t).exists, form)
+      Logs.appendIdempotent(spark, logs(1, 10), t, staged = staged)
+      Logs.appendIdempotent(spark, none, t, staged = staged)
+      assert(Logs.read(spark, t).count() === 9, form)
+      assert(!new java.io.File(t, "_graft_stage").exists, form)
+    }
   }
 
   test("no append leaves a pin behind, including one that throws") {
@@ -193,5 +215,85 @@ class AppendOnceSpec extends SparkSpec {
     assert(pins === before)
     assert(!seen.toArray.exists(_.toString.contains("was locally checkpointed")),
       seen.toArray.mkString("\n"))
+  }
+
+  /** `rows` stored under `t` as one file per range, partitioned as the
+    * table is but with parquet column statistics off. */
+  private def storeWithoutStats(rows: DataFrame, t: String): Unit =
+    rows.withColumn("block_range", (col("block_number") / Logs.blocksPerPartition).cast(LongType))
+      .repartition(col("block_range")).write.option("parquet.column.statistics.enabled", "false")
+      .partitionBy("block_range").mode("append").parquet(t)
+
+  test("an append whose window overlaps no stored file runs two jobs and reads no stored row") {
+    Seq("plain" -> false, "staged" -> true).foreach { case (form, staged) =>
+      val t = table(s"two_jobs_$form")
+      Logs.appendIdempotent(spark, logs(0, 5000), t, staged = staged)
+      // same block_range, a window no stored file's footer covers
+      val (jobs, read) = jobsAndRecordsReadBy(
+        Logs.appendIdempotent(spark, logs(6000, 6200), t, staged = staged))
+      assert(jobs === 2, form)
+      // the batch's own 200 source rows, and not one stored row
+      assert(read === 200, s"$form read $read records for a 200-row batch")
+      assert(Logs.read(spark, t).count() === 5200, form)
+    }
+  }
+
+  test("a stored file without statistics is probed and the dedup stays exact") {
+    val t = table("no_stats")
+    storeWithoutStats(logs(0, 1000), t)
+    // the stored footer carries no block_number window to rule the file out
+    val file = new java.io.File(t, "block_range=0").listFiles().filter(_.getName.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(file.getPath), spark.sparkContext.hadoopConfiguration))
+    try assert(reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .filter(_.getPath.toDotString == "block_number").forall(!_.getStatistics.hasNonNullValue))
+    finally reader.close()
+    val (_, read) = jobsAndRecordsReadBy(Logs.appendIdempotent(spark, logs(900, 1100), t))
+    // the batch's 200 source rows, then the probe: the staged rows and
+    // every row of the file, whose footer cannot rule it out
+    assert(read >= 200 + 1000, s"the footer-less file was not probed: $read records read")
+    Logs.appendIdempotent(spark, logs(950, 1200), t, staged = true)
+    assert(Logs.read(spark, t).count() === 1200)
+    assert(dupPks(t) === 0)
+  }
+
+  test("every append form writes each file sorted by (address, topic0)") {
+    forms.foreach { case (form, append) =>
+      val t = table(s"sorted_$form")
+      // addresses and topics cycle with the block, so arrival order is unsorted
+      append(logs(0, 5000).withColumn("topic0", concat(lit("0xsig"), (col("block_number") % 7)
+        .cast(StringType))), t)
+      val files = new java.io.File(t, "block_range=0").listFiles().map(_.getPath)
+        .filter(_.endsWith(".parquet"))
+      assert(files.length === 1, form)
+      val keys = spark.read.parquet(files.head).select("address", "topic0").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(keys.size === 5000, form)
+      assert(keys === keys.sorted, s"$form: ${files.head} is not sorted by (address, topic0)")
+    }
+  }
+
+  test("a stage left by a crash before its publish is invisible and never published") {
+    val t = table("crash")
+    /** What a crashed append leaves: staged files, never renamed. */
+    def leftover(rows: DataFrame): Unit =
+      rows.withColumn("block_range", (col("block_number") / Logs.blocksPerPartition).cast(LongType))
+        .write.partitionBy("block_range").parquet(s"$t/_graft_stage/${java.util.UUID.randomUUID()}")
+    leftover(logs(1, 100))
+    // the empty-table rule holds: nothing is committed yet
+    assert(Logs.read(spark, t).count() === 0)
+    assert(Logs.highWaterMark(spark, t) === 0L)
+    Logs.appendIdempotent(spark, logs(1, 100), t)
+    assert(Logs.read(spark, t).count() === 99)
+    leftover(logs(50, 300))
+    assert(Logs.read(spark, t).count() === 99)
+    assert(Logs.highWaterMark(spark, t) === 99L)
+    // re-appending the crashed batches lands each row exactly once
+    Logs.appendIdempotent(spark, logs(50, 300), t)
+    Logs.appendIdempotent(spark, logs(1, 100), t, staged = true)
+    Logs.appendIdempotent(spark, logs(50, 300), t, staged = true)
+    assert(Logs.read(spark, t).count() === 299)
+    assert(Logs.highWaterMark(spark, t) === 299L)
+    assert(dupPks(t) === 0)
   }
 }
